@@ -86,8 +86,6 @@ def _verification_rank() -> dict:
 def _collect(attr: str) -> dict:
     import importlib
 
-    from nlp_data_pipeline_spark import staging
-
     out: dict = {}
     for modname in _MODULES:
         try:
@@ -95,13 +93,6 @@ def _collect(attr: str) -> dict:
         except ImportError:
             continue  # module not built yet
         out.update(getattr(mod, attr, {}))
-        # Staged declarations (see staging.py): merged lazily per call so
-        # declaration state tracks the committed CORRECTNESS_r*.json
-        # round markers, not whatever existed at first import.
-        staged = getattr(mod, "STAGED_" + attr, {})
-        for rnd in sorted(staged):
-            if staging.staged_ops_live(rnd):
-                out.update(staged[rnd])
     rank = _verification_rank()
     names = list(out)
     # (needs-verification first, then oldest last-check, then dict order)

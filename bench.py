@@ -70,26 +70,6 @@ KNOWN_PLAN_NOISE = {
     # with before/after dumps in plans/r15/ and OPTIMIZATION_r15.md.)
 }
 
-# One-time note for the r12 call-site normalizer (below): every query
-# whose plan carries a localCheckpoint scan gets a new md5 against the
-# pre-fix r11 baseline. Self-retiring — applied only while the diff
-# baseline is bench_full_r11 or older, so from r13 a flip in a
-# checkpoint-carrying query is unexplained again unless truly new.
-# ADVICE r12 cross-check (performed round 13): all 28 r11→r12 md5
-# flips carry IDENTICAL struct_md5 AND n_exchanges vs bench_full_r11 —
-# so none of the auto-annotated flips hid a real plan change from the
-# same round's LP-cap/escalation refactor; only the full md5 (which
-# embedded the JVM call site pre-normalizer) moved. The note is
-# self-retiring: ckpt_note_active is False from the first r12-baseline
-# diff, so a checkpoint-carrying flip is unexplained again from r13.
-_CKPT_NOTE = (
-    "one-time: localCheckpoint call-site normalizer added r12 — the "
-    "pre-fix baseline md5 embeds the JVM reflective call site "
-    "(NativeMethodAccessorImpl vs <unknown> after JIT accessor swap), "
-    "the r11 p04/s33/t42 flips"
-)
-
-
 def _prep_multifile(spark, sf_dir: str, n_files: int = 32) -> str:
     """Rewrite the driver's single-file parquet tables as n_files-way
     directories under the temp dir (once, marker-gated) and bench against
@@ -206,59 +186,15 @@ def main() -> int:
         runs/rounds — lets future rounds diff 'did the plan change' per
         query without storing full explain output."""
         try:
-            from nlp_data_pipeline_spark.plans.explain import formatted_plan
+            from nlp_data_pipeline_spark.plans.explain import (
+                formatted_plan,
+                normalize_plan,
+            )
 
-            p = formatted_plan(df)
-            p = re.sub(r"#\d+", "#", p)
-            p = re.sub(r"plan_id=\d+", "plan_id=", p)
-            p = re.sub(r"\[id=#?\d*\]", "", p)
-            p = re.sub(r"file:[\w\-./=]*", "<path>", p)
-            p = re.sub(r"/tmp/[\w\-./=]*", "<path>", p)
-            p = re.sub(r"/root/testdata/[\w\-./=]*", "<path>", p)
-            # lambda vars carry a session-global counter (x_5, x_7, ...)
-            p = re.sub(r"lambda [a-zA-Z]+_\d+#", "lambda v#", p)
-            # localCheckpoint / Python-created scans embed the session-
-            # global RDD id (MapPartitionsRDD[159]) — pure run noise
-            p = re.sub(r"RDD\[\d+\]", "RDD[]", p)
-            # ... and the checkpoint's recorded CALL SITE, which flips
-            # between 'NativeMethodAccessorImpl.java:0' and
-            # '<unknown>:0' once the JVM JIT replaces the reflective
-            # py4j accessor with a generated one mid-session — pure
-            # run-order noise (the r11 p04/s33/t42 plan_changed rows;
-            # same rule as tools/bench_10x.py, where round 11 first
-            # hit it on s33)
-            # ([^,\n], not [^,]: a negated class without \n matches
-            # across lines and would swallow the next plan line's
-            # prefix up to its first comma, masking real diffs in the
-            # region after the checkpoint scan — ADVICE r12)
-            p = re.sub(
-                r"localCheckpoint at [^,\n]*", "localCheckpoint at <site>", p
-            )
-            # ... and the SAME JIT accessor-swap noise on createDataFrame
-            # scans: `Scan ExistingRDD` embeds `applySchemaToPythonRDD at
-            # NativeMethodAccessorImpl.java:0`, which flips to
-            # `<unknown>:0` once the JVM replaces the reflective py4j
-            # accessor mid-session (observed round 14: n07/p07-class
-            # createDataFrame queries flipping md5 between two
-            # identical-HEAD full-suite runs with identical exchange
-            # counts; fresh-session plans byte-identical).
-            p = re.sub(
-                r"applySchemaToPythonRDD at [^,\n]*",
-                "applySchemaToPythonRDD at <site>",
-                p,
-            )
-            # q30/q51 catalog tables are named <table>_bkt_/_cbo_ +
-            # md5(sf_dir): a PATH-derived identity that leaks into the
-            # scan node title (Scan parquet spark_catalog.default.
-            # orders_bkt_xxxx) and flips whenever the driver regenerates
-            # the testdata (new mtimes -> new prep-dir key). Same
-            # normalization class as the <path> rules above.
-            p = re.sub(r"_(bkt|cbo)_[0-9a-f]{6,12}", r"_\1_<key>", p)
+            p = normalize_plan(formatted_plan(df))
             return {
                 "plan_md5": hashlib.md5(p.encode()).hexdigest()[:12],
-                # checkpoint-scan count: lets the one-time _CKPT_NOTE
-                # annotation self-scope to the queries the r12 call-site
-                # normalizer actually re-hashed
+                # localCheckpoint scans (pinned intermediates) in the plan
                 "n_ckpt": p.count("localCheckpoint at <site>"),
                 "n_exchanges": p.count("Exchange"),
                 # ReusedExchange = a shuffle COMPUTED ONCE and read twice
@@ -284,16 +220,12 @@ def main() -> int:
         for p in _glob.glob(os.path.join(here, "bench_full_r*.json"))
         if (m := re.search(r"bench_full_r(\d+)\.json$", p))
     ]
-    baseline_round = max(prev_files)[0] if prev_files else None
     if prev_files:
         try:
             with open(max(prev_files)[1]) as f:
                 prev_plans = json.load(f).get("queries", {})
         except Exception:
             prev_plans = {}
-    # the call-site normalizer landed in r12, so only diffs against a
-    # PRE-fix baseline (r11 or older) earn the one-time note
-    ckpt_note_active = baseline_round is not None and baseline_round <= 11
 
     def _plan_stable(name: str, fp: dict):
         """True/False vs previous round; None when no prior fingerprint
@@ -347,13 +279,9 @@ def main() -> int:
         # a plan_changed entry absent from this dict is unexplained and
         # deserves investigation.
         "plan_change_notes": {
-            k: KNOWN_PLAN_NOISE.get(k, _CKPT_NOTE)
+            k: KNOWN_PLAN_NOISE[k]
             for k, v in stability.items()
-            if v is False
-            and (
-                k in KNOWN_PLAN_NOISE
-                or (ckpt_note_active and full.get(k, {}).get("n_ckpt"))
-            )
+            if v is False and k in KNOWN_PLAN_NOISE
         },
         # physical-layout provenance: numbers measured after the
         # multi-file prep are NOT comparable to timings on the driver's

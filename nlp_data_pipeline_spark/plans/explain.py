@@ -9,6 +9,8 @@ breaks pushdown fails CI.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -16,6 +18,40 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def normalize_plan(plan: str) -> str:
+    """Strip run noise from a formatted plan so one plan shape yields one
+    text across sessions, runs and data directories — the input every
+    plan fingerprint (md5, exchange counts) is computed from."""
+    # expression ids, plan ids and exchange ids are session counters
+    p = re.sub(r"#\d+", "#", plan)
+    p = re.sub(r"plan_id=\d+", "plan_id=", p)
+    p = re.sub(r"\[id=#?\d*\]", "", p)
+    # data locations, not just temp dirs: the same query over two
+    # directories (a scaled copy, a regenerated test-data tree) is one plan
+    p = re.sub(r"file:[\w\-./=]*", "<path>", p)
+    p = re.sub(r"/tmp/[\w\-./=]*", "<path>", p)
+    p = re.sub(r"(?:/[\w\-.]+)*/testdata/[\w\-./=]*", "<path>", p)
+    # lambda variables carry a session-global counter (x_5, x_7, ...)
+    p = re.sub(r"lambda [a-zA-Z]+_\d+#", "lambda v#", p)
+    # localCheckpoint and Python-created scans embed the session-global
+    # RDD id (MapPartitionsRDD[159])
+    p = re.sub(r"RDD\[\d+\]", "RDD[]", p)
+    # a checkpoint's recorded call site flips between
+    # 'NativeMethodAccessorImpl.java:0' and '<unknown>:0' once the JVM JIT
+    # replaces the reflective py4j accessor mid-session. [^,\n], not [^,]:
+    # a negated class without \n matches across lines and would swallow
+    # the next plan line up to its first comma, masking real diffs there.
+    p = re.sub(r"localCheckpoint at [^,\n]*", "localCheckpoint at <site>", p)
+    # the same accessor swap on createDataFrame scans (Scan ExistingRDD)
+    p = re.sub(
+        r"applySchemaToPythonRDD at [^,\n]*", "applySchemaToPythonRDD at <site>", p
+    )
+    # q30/q51 catalog tables are named <table>_bkt_/_cbo_ + md5(sf_dir): a
+    # path-derived key in the scan node title, normalized like the paths
+    p = re.sub(r"_(bkt|cbo)_[0-9a-f]{6,12}", r"_\1_<key>", p)
+    return p
 
 
 def physical_plan(df: DataFrame) -> str:

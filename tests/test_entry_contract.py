@@ -26,10 +26,23 @@ def test_entry_returns_rows(spark):
 
 
 def test_oracle_keys_subset_of_queries():
+    import importlib
+
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) >= 40
+    # per module: every oracle has its query, and no query name is declared
+    # by two modules (the aggregate's dict update would silently keep only
+    # the later module's function)
+    owner: dict = {}
+    for modname in entry_mod._MODULES:
+        mod = importlib.import_module(modname)
+        assert set(mod.ORACLES) <= set(mod.QUERIES), modname
+        for name in mod.QUERIES:
+            assert name not in owner, (name, owner.get(name), modname)
+            owner[name] = modname
+    assert set(owner) == set(qs)
 
 
 def test_rotation_puts_never_green_queries_first():
@@ -81,8 +94,7 @@ def test_rows_only_set_is_exactly_the_sanctioned_three():
     """Every declared query carries a DuckDB oracle EXCEPT the three
     sanctioned LDA-dependent ones (SURVEY §5.2-2) — a forgotten ORACLES
     entry would silently downgrade a query to the weaker rows-only
-    check, which this pins. Holds across staging-gate states: staged
-    operators must ship their oracle in the same gate block."""
+    check, which this pins."""
     qs = set(entry_mod.queries())
     oracled = set(entry_mod.oracle_sql())
     assert qs - oracled == {"n01_lda_topics", "n02_doc_tags", "n03_topic_metrics"}

@@ -11,6 +11,7 @@ from nlp_data_pipeline_spark.operators import relational, text_analytics, simila
 from nlp_data_pipeline_spark.plans.explain import (
     formatted_plan,
     has_python_eval,
+    normalize_plan,
     pushed_filters,
     scans_columns,
     uses_broadcast_join,
@@ -528,3 +529,35 @@ def test_sf_scaled_relations_respect_broadcast_threshold(spark, sf_dir):
         assert all("SortMergeJoin" in l for l in j55), j55
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_normalize_plan_strips_every_noise_class():
+    """One synthetic plan carrying each class of run noise the plan
+    fingerprints must ignore; the checkpoint call-site rule must not
+    reach past its own line."""
+    plan = (
+        "(1) Scan parquet spark_catalog.default.orders_bkt_0123abcd\n"
+        "Output [2]: [o_orderkey#12L, o_custkey#13L]\n"
+        "Location: InMemoryFileIndex [file:/data/sf0.01/orders.parquet]\n"
+        "(2) Exchange hashpartitioning(o_custkey#13L, 8), [plan_id=42]\n"
+        "(3) BroadcastExchange [id=#77]\n"
+        "(4) Project [transform(ids#5, lambdafunction(lambda x_5#81, lambda x_5#81))]\n"
+        "(5) Scan ExistingRDD [v#3L] MapPartitionsRDD[159] at "
+        "applySchemaToPythonRDD at NativeMethodAccessorImpl.java:0, rows\n"
+        "(6) Scan ExistingRDD [src#7L] MapPartitionsRDD[160] at "
+        "localCheckpoint at <unknown>:0\n"
+        "(7) Scan text /tmp/spark-1234/part-0, /srv/testdata/sf0.01/documents.parquet\n"
+    )
+    assert normalize_plan(plan) == (
+        "(1) Scan parquet spark_catalog.default.orders_bkt_<key>\n"
+        "Output [2]: [o_orderkey#L, o_custkey#L]\n"
+        "Location: InMemoryFileIndex [<path>]\n"
+        "(2) Exchange hashpartitioning(o_custkey#L, 8), [plan_id=]\n"
+        "(3) BroadcastExchange \n"
+        "(4) Project [transform(ids#, lambdafunction(lambda v#, lambda v#))]\n"
+        "(5) Scan ExistingRDD [v#L] MapPartitionsRDD[] at "
+        "applySchemaToPythonRDD at <site>, rows\n"
+        "(6) Scan ExistingRDD [src#L] MapPartitionsRDD[] at "
+        "localCheckpoint at <site>\n"
+        "(7) Scan text <path>, <path>\n"
+    )

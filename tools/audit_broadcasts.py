@@ -80,9 +80,6 @@ def main() -> int:
     ):
         mod = importlib.import_module(f"nlp_data_pipeline_spark.operators.{m}")
         fns.update(getattr(mod, "QUERIES", {}))
-        for gate_ops in getattr(mod, "STAGED_QUERIES", {}).values():
-            for op, fn in gate_ops.items():
-                fns.setdefault(op, fn)
 
     out: dict = {}
     for name in names:

@@ -186,35 +186,9 @@ def _force(df) -> None:
 
 
 def _fingerprint(df) -> tuple[str, str, int]:
-    from nlp_data_pipeline_spark.plans.explain import formatted_plan
+    from nlp_data_pipeline_spark.plans.explain import formatted_plan, normalize_plan
 
-    p = formatted_plan(df)
-    p = re.sub(r"#\d+", "#", p)
-    p = re.sub(r"plan_id=\d+", "plan_id=", p)
-    p = re.sub(r"\[id=#?\d*\]", "", p)
-    # normalize DATA LOCATIONS, not just /tmp: the whole point is
-    # comparing the same query over two different directories
-    p = re.sub(r"file:[\w\-./=]*", "<path>", p)
-    p = re.sub(r"/tmp/[\w\-./=]*", "<path>", p)
-    p = re.sub(r"/root/testdata/[\w\-./=]*", "<path>", p)
-    # lambda variables carry a session-global counter (x_5, x_7, ...)
-    # that differs between plan INSTANCES of the same query
-    p = re.sub(r"lambda [a-zA-Z]+_\d+#", "lambda v#", p)
-    # localCheckpoint / Python-created scans embed the session-global
-    # RDD id (MapPartitionsRDD[159]) — pure run noise
-    p = re.sub(r"RDD\[\d+\]", "RDD[]", p)
-    # the checkpoint's recorded CALL SITE flips between
-    # 'NativeMethodAccessorImpl.java:0' and '<unknown>:0' once the JVM
-    # JIT inlines the reflective py4j frame — run-order noise, not a
-    # plan change (burned a false plan_stable=false on s33)
-    p = re.sub(r"localCheckpoint at [^,\n]*", "localCheckpoint at <site>", p)
-    # JIT accessor-swap noise on createDataFrame scans (round 14; same
-    # class as the localCheckpoint call-site rule above)
-    p = re.sub(
-        r"applySchemaToPythonRDD at [^,\n]*",
-        "applySchemaToPythonRDD at <site>",
-        p,
-    )
+    p = normalize_plan(formatted_plan(df))
     # structural hash: data-DEPENDENT constants legitimately differ
     # between scales (s19 folds 1/n into its PageRank init, s20 its
     # corpus size into scan_fraction) — stability means same TREE, so
@@ -350,22 +324,7 @@ def main() -> int:
     names = [n for n in HEAVY if not prefixes or n.startswith(prefixes)]
 
     spark = get_spark("bench10x")
-    queries = dict(e.queries())
-    # staged (declaration-deferred) operators live in their modules but
-    # not yet in queries(); probe them at scale all the same
-    from nlp_data_pipeline_spark.operators import dedup as _dd
-    from nlp_data_pipeline_spark.operators import doc_pipeline as _dp
-    from nlp_data_pipeline_spark.operators import events as _ev
-    from nlp_data_pipeline_spark.operators import multimodal as _mm
-    from nlp_data_pipeline_spark.operators import nlp_model as _nm
-    from nlp_data_pipeline_spark.operators import relational_ext as _rx
-    from nlp_data_pipeline_spark.operators import similarity as _sim
-    from nlp_data_pipeline_spark.operators import text_analytics as _ta
-
-    for mod in (_ta, _dd, _sim, _dp, _mm, _nm, _ev, _rx):
-        for gate_ops in getattr(mod, "STAGED_QUERIES", {}).values():
-            for staged, fn in gate_ops.items():
-                queries.setdefault(staged, fn)
+    queries = e.queries()
 
     # Stage BOTH scales through the same 32-file writer: the raw driver
     # tables are single-row-group files whose scans cap at 1 task, so

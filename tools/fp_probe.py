@@ -20,26 +20,9 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 
 def fingerprint(df) -> dict:
-    from nlp_data_pipeline_spark.plans.explain import formatted_plan
+    from nlp_data_pipeline_spark.plans.explain import formatted_plan, normalize_plan
 
-    p = formatted_plan(df)
-    p = re.sub(r"#\d+", "#", p)
-    p = re.sub(r"plan_id=\d+", "plan_id=", p)
-    p = re.sub(r"\[id=#?\d*\]", "", p)
-    p = re.sub(r"file:[\w\-./=]*", "<path>", p)
-    p = re.sub(r"/tmp/[\w\-./=]*", "<path>", p)
-    p = re.sub(r"/root/testdata/[\w\-./=]*", "<path>", p)
-    p = re.sub(r"lambda [a-zA-Z]+_\d+#", "lambda v#", p)
-    p = re.sub(r"RDD\[\d+\]", "RDD[]", p)
-    p = re.sub(r"localCheckpoint at [^,\n]*", "localCheckpoint at <site>", p)
-    # JIT accessor-swap noise on createDataFrame scans (round 14; same
-    # class as the localCheckpoint call-site rule above)
-    p = re.sub(
-        r"applySchemaToPythonRDD at [^,\n]*",
-        "applySchemaToPythonRDD at <site>",
-        p,
-    )
-    p = re.sub(r"_(bkt|cbo)_[0-9a-f]{6,12}", r"_\1_<key>", p)
+    p = normalize_plan(formatted_plan(df))
     return {
         "plan_md5": hashlib.md5(p.encode()).hexdigest()[:12],
         "n_exchanges": p.count("Exchange"),
