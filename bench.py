@@ -132,17 +132,27 @@ def main() -> int:
     # VERDICT r14 #2: the LDA fit memo's DISK layer (nlp_model.py)
     # persisted across bench runs, so a steady-state bench never timed
     # the CV+LDA fit (n01 read a model fitted in a PREVIOUS run). Wipe
-    # both memo layers before EVERY timed sample of n01 — per-sample,
-    # not just per-suite, because the min-of-N retry would otherwise
-    # re-measure against the memo the first sample warmed and report
-    # the warm number (observed: cold fit 20.2 s in sample 1, retry
-    # 0.66 s, min reported 0.66 s). n01's row now IS the cold fit;
-    # n02/n03/p03 share the in-process fit n01's last sample left —
+    # both memo layers before EVERY timed sample of the first selected
+    # fit consumer — per-sample, not just per-suite, because the min-of-N
+    # retry would otherwise re-measure against the memo the first sample
+    # warmed and report the warm number (observed: cold fit 20.2 s in
+    # sample 1, retry 0.66 s, min reported 0.66 s). That query's row IS
+    # the cold fit (n01 in a full run; n02 in a `bench.py n02` run); the
+    # later consumers share the in-process fit its last sample left —
     # intra-run reuse inside one timed suite, not cross-run caching.
     from nlp_data_pipeline_spark.operators.nlp_model import reset_fit_cache
 
     reset_fit_cache()  # never start a suite against a previous run's disk model
-    PRE_MEASURE = {"n01_lda_topics": reset_fit_cache}
+    fit_consumers = (
+        "n01_lda_topics",
+        "n02_doc_tags",
+        "n03_topic_metrics",
+        "p03_records_with_tags",
+    )
+    first_fit = next(
+        (n for n in fit_consumers if not prefixes or n.startswith(prefixes)), None
+    )
+    PRE_MEASURE = {first_fit: reset_fit_cache} if first_fit else {}
 
     # Warm one-time machinery so per-query numbers measure compute, not
     # initialization: JVM/codegen, the parquet read path, and the Python

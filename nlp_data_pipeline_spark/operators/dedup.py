@@ -1152,8 +1152,7 @@ def d33_capped_split_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# d13: cross-source contamination matrix (oracle-parity-tested in
-# test_round6_ops.py::test_d13_matches_duckdb_oracle).
+# d13: cross-source contamination matrix.
 #
 # The corpus-curation diagnostic that DECIDES dedup strategy: for each
 # pair of sources, how many distinct shingles they share and the
@@ -1263,8 +1262,7 @@ ORDER BY s.src_a, s.src_b
 
 
 # --------------------------------------------------------------------------
-# d14: dedup yield histogram (oracle-parity-tested in
-# test_round6_ops.py::test_d14_matches_duckdb_oracle).
+# d14: dedup yield histogram.
 #
 # The planning number a dedup run is sized by: the near-dup
 # CLUSTER-SIZE distribution. n_clusters × (size − 1) docs are
@@ -1310,8 +1308,7 @@ ORDER BY cluster_size""",
 
 
 # --------------------------------------------------------------------------
-# d15: blocked edit-distance near-dup pairs (oracle-parity-tested in
-# test_round7_ops.py::test_d15_matches_duckdb_oracle).
+# d15: blocked edit-distance near-dup pairs.
 #
 # The record-linkage dedup modality the shingle/MinHash family misses:
 # CHARACTER-level edit distance catches near-dups whose token sets
@@ -1411,8 +1408,7 @@ LIMIT 20
 
 
 # --------------------------------------------------------------------------
-# d16: content-defined chunking (FastCDC shape) (oracle-parity-tested in
-# test_round7_ops.py::test_d16_matches_duckdb_oracle).
+# d16: content-defined chunking (FastCDC shape).
 #
 # The chunk-granularity dedup primitive d11's fixed spans can't give:
 # chunk boundaries chosen by CONTENT (rolling hash of the trailing
@@ -1540,8 +1536,7 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# d17: asymmetric CONTAINMENT near-dup pairs (oracle-parity-tested in
-# test_round7_ops.py::test_d17_matches_duckdb_oracle).
+# d17: asymmetric CONTAINMENT near-dup pairs.
 #
 # The dedup signal symmetric Jaccard (d05) is structurally blind to:
 # containment |A∩B| / min(|A|,|B|) detects a SMALL document embedded
@@ -1604,8 +1599,7 @@ LIMIT 20
 
 
 # --------------------------------------------------------------------------
-# d19: shingle-size sensitivity curve (oracle-parity-tested in
-# test_round7_ops.py::test_d19_matches_duckdb_oracle).
+# d19: shingle-size sensitivity curve.
 #
 # The dedup counterpart of s20's IVF operating curve: the shingle
 # width k is THE precision knob of n-gram near-dup detection (small k

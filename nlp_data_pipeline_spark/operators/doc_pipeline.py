@@ -1002,9 +1002,7 @@ ORDER BY filename
 
 
 # --------------------------------------------------------------------------
-# a03: sketch set algebra — HLL INTERSECTION via inclusion-exclusion
-# (oracle-parity-tested in
-# test_round6_ops.py::test_a03_matches_duckdb_oracle).
+# a03: sketch set algebra — HLL INTERSECTION via inclusion-exclusion.
 #
 # HLL sketches union natively (a02) but NOT intersect; the standard
 # answer is inclusion-exclusion over union estimates:
@@ -1095,8 +1093,7 @@ ORDER BY i.type_a, i.type_b
 
 
 # --------------------------------------------------------------------------
-# r12: native XML ingestion (oracle-parity-tested in
-# test_round6_ops.py::test_r12_matches_duckdb_oracle).
+# r12: native XML ingestion.
 #
 # Spark 4 ships the spark-xml connector in-core (SPARK-44265): rowTag
 # streaming parse, schema projection, the same DataSourceV2 pushdown
@@ -1152,8 +1149,7 @@ ORDER BY lang
 
 
 # --------------------------------------------------------------------------
-# r13: training-shard materialization (oracle-parity-tested in
-# test_round6_ops.py::test_r13_matches_duckdb_oracle).
+# r13: training-shard materialization.
 #
 # The LAST step of the training-data pipeline: take p04's kept
 # documents, assign t35's deterministic shard, physically WRITE the
@@ -1220,8 +1216,7 @@ ORDER BY shard
 
 
 # --------------------------------------------------------------------------
-# r14: metadata-column file lineage (oracle-parity-tested in
-# test_round6_ops.py::test_r14_matches_duckdb_oracle).
+# r14: metadata-column file lineage.
 #
 # Spark's hidden `_metadata` struct (SPARK-37273): every file-source
 # row carries file_path/file_size/row_index without any data-side
@@ -1279,8 +1274,7 @@ FROM groups
 
 
 # --------------------------------------------------------------------------
-# p05: corpus snapshot diff (oracle-parity-tested in
-# test_round6_ops.py::test_p05_matches_duckdb_oracle).
+# p05: corpus snapshot diff.
 #
 # Dataset-versioning diff: given two corpus snapshots, classify every
 # document as unchanged / changed (same id, different content hash) /
@@ -1356,9 +1350,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r15: custom STREAMING source via the Python Data Source API
-# (oracle-parity-tested in
-# test_round7_ops.py::test_r15_matches_duckdb_oracle).
+# r15: custom STREAMING source via the Python Data Source API.
 #
 # r08 covers the batch half of the API; this is the streaming half
 # (DataSourceStreamReader): the `docfeed` source serves the documents
@@ -1433,9 +1425,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r16: custom STREAMING sink via the Python Data Source API
-# (oracle-parity-tested in
-# test_round7_ops.py::test_r16_matches_duckdb_oracle).
+# r16: custom STREAMING sink via the Python Data Source API.
 #
 # The last cell of the Python-DataSource 2×2 matrix (batch read r08,
 # batch write r09, stream read r15, stream write THIS): the docfeed
@@ -1504,8 +1494,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r17: recursive file discovery + glob filtering (oracle-parity-tested in
-# test_round7_ops.py::test_r17_matches_duckdb_oracle).
+# r17: recursive file discovery + glob filtering.
 #
 # Real corpora arrive as messy directory TREES (crawl dumps nested by
 # date/domain, mixed with sidecar files). This covers the discovery
@@ -1567,8 +1556,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r18: corrupt-FILE-resilient ingestion (oracle-parity-tested in
-# test_round7_ops.py::test_r18_matches_duckdb_oracle).
+# r18: corrupt-FILE-resilient ingestion.
 #
 # r02 handles corrupt RECORDS inside a parseable file; this covers the
 # coarser failure real landing zones produce — a whole unreadable
@@ -1620,8 +1608,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# p06: declarative dataflow-graph pipeline (oracle-parity-tested in
-# test_round7_ops.py::test_p06_matches_duckdb_oracle).
+# p06: declarative dataflow-graph pipeline.
 #
 # The Declarative-Pipelines PATTERN without the Spark-Connect
 # dependency (pyspark.pipelines executes only under connect/grpcio —

@@ -1097,8 +1097,7 @@ ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# e18: dropDuplicatesWithinWatermark (oracle-parity-tested in
-# test_round6_ops.py::test_e18_matches_duckdb_oracle).
+# e18: dropDuplicatesWithinWatermark.
 #
 # The Spark 3.5 dedup API e09 does NOT cover: duplicate keys WITHOUT
 # event-time in the key — state holds one entry per key and is evicted
@@ -1152,8 +1151,7 @@ ORDER BY user_id, event_type
 
 
 # --------------------------------------------------------------------------
-# e19: state-store reader (oracle-parity-tested in
-# test_round6_ops.py::test_e19_matches_duckdb_oracle).
+# e19: state-store reader.
 #
 # Spark's State Data Source (`spark.read.format("statestore")`,
 # SPARK-45511): batch-read the persisted state of a running/stopped
@@ -1215,8 +1213,7 @@ ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# e20: STREAMING quantile monitoring (oracle-parity-tested in
-# test_round6_ops.py::test_e20_matches_duckdb_oracle).
+# e20: STREAMING quantile monitoring.
 #
 # Production streams monitor value DISTRIBUTIONS, not just counts:
 # per-type approximate percentiles maintained by the stream
@@ -1296,9 +1293,7 @@ ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# e21: streaming admission control (maxFilesPerTrigger × AvailableNow)
-# (oracle-parity-tested in test_round7_ops.py::
-# test_e21_matches_duckdb_oracle).
+# e21: streaming admission control (maxFilesPerTrigger × AvailableNow).
 #
 # The backpressure knob every production file/queue stream runs with:
 # maxFilesPerTrigger bounds each micro-batch's intake, and
@@ -1386,8 +1381,7 @@ FROM events
 
 
 # --------------------------------------------------------------------------
-# e22: row-level ForeachWriter sink (oracle-parity-tested in
-# test_round7_ops.py::test_e22_matches_duckdb_oracle).
+# e22: row-level ForeachWriter sink.
 #
 # The third and last streaming-sink API beside foreachBatch (e11) and
 # the custom DataSourceStreamWriter (r16): `writeStream.foreach(w)`
@@ -1486,9 +1480,7 @@ ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# a04: approx_top_k heavy-hitters sketch (SPARK-49662, Spark 4.1)
-# (oracle-parity-tested in
-# test_round7_ops.py::test_a04_matches_duckdb_oracle).
+# a04: approx_top_k heavy-hitters sketch (SPARK-49662, Spark 4.1).
 #
 # The native heavy-hitters aggregate beside t17's hand-rolled
 # count-min sketch: one pass, mergeable state, no exact groupBy of the

@@ -417,8 +417,7 @@ ORDER BY filename
 
 
 # --------------------------------------------------------------------------
-# m08: perceptual-hash image dedup (oracle-parity-tested in
-# test_round6_ops.py::test_m08_matches_duckdb_oracle).
+# m08: perceptual-hash image dedup.
 #
 # The multimodal twin of MinHash text dedup: decode (real PNG path,
 # functions/png.py) → integer-only 64-bit average-hash → SimHash-style
@@ -549,9 +548,7 @@ ORDER BY file_a, file_b
 
 
 # --------------------------------------------------------------------------
-# m09: binary container-header parse in PURE JVM expressions
-# (oracle-parity-tested in
-# test_round7_ops.py::test_m09_matches_duckdb_oracle).
+# m09: binary container-header parse in PURE JVM expressions.
 #
 # m07 decodes PNG in Python; this shows the cheaper tier: structured
 # FIELD EXTRACTION from a binary container without ever leaving

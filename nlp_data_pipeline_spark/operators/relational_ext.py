@@ -1172,14 +1172,17 @@ def q40_incremental_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
             F.sum("total_price").alias("total_price"),
         )
     )
+    avg = F.col("total_price").cast("double") / F.col("n_orders")
     return merged.select(
         "month",
         "status",
         "n_orders",
         F.col("total_price").cast("double").alias("total_price"),
-        F.round(F.col("total_price").cast("double") / F.col("n_orders"), 4).alias(
-            "avg_price"
-        ),
+        # DuckDB's round(x, 4) rounds the double x * 10^4, while Spark's
+        # rounds x's shortest decimal string HALF_UP; the two differ on
+        # exact ties such as 2207782.51 / 8. Rounding x * 10^4 to an
+        # integer makes Spark round the same double DuckDB does.
+        (F.round(avg * 10000, 0) / 10000).alias("avg_price"),
     ).orderBy("month", "status")
 
 
@@ -1297,8 +1300,7 @@ ORDER BY o_orderpriority
 
 
 # --------------------------------------------------------------------------
-# q42: collation-aware grouping (oracle-parity-tested in
-# test_round6_ops.py::test_q42_matches_duckdb_oracle).
+# q42: collation-aware grouping.
 #
 # Spark 4 string collations (SPARK-46830): `COLLATE UTF8_LCASE` makes
 # equality/grouping/joins case-insensitive IN THE ENGINE — hash
@@ -1338,8 +1340,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# q43: explicit GROUPING SETS (oracle-parity-tested in
-# test_round7_ops.py::test_q43_matches_duckdb_oracle).
+# q43: explicit GROUPING SETS.
 #
 # The DataFrame-API twin of v04's SQL GROUPING SETS: the
 # df.groupingSets() method (SPARK-45929, new in Spark 4) — previously
@@ -1382,8 +1383,7 @@ ORDER BY gid, o_orderpriority ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST
 
 
 # --------------------------------------------------------------------------
-# u06: cogrouped-pandas as-of attribution (oracle-parity-tested in
-# test_round7_ops.py::test_u06_matches_duckdb_oracle).
+# u06: cogrouped-pandas as-of attribution.
 #
 # The one applyInPandas surface the u-series lacked: TWO grouped
 # DataFrames cogrouped on a key, each (key, left-frame, right-frame)
@@ -1476,8 +1476,7 @@ ORDER BY user_id
 
 
 # --------------------------------------------------------------------------
-# u07: mapInArrow batch kernel (oracle-parity-tested in
-# test_round7_ops.py::test_u07_matches_duckdb_oracle).
+# u07: mapInArrow batch kernel.
 #
 # The lowest-level Python batch surface: raw pyarrow RecordBatches in
 # and out, no pandas conversion layer — the shape for numeric kernels
@@ -1531,9 +1530,7 @@ ORDER BY vec_id
 
 
 # --------------------------------------------------------------------------
-# q44: listagg / ordered string aggregation (SPARK-42746, Spark 4.1)
-# (oracle-parity-tested in
-# test_round7_ops.py::test_q44_matches_duckdb_oracle).
+# q44: listagg / ordered string aggregation (SPARK-42746, Spark 4.1).
 #
 # The SQL:2023 `LISTAGG(expr, sep) WITHIN GROUP (ORDER BY ...)`
 # surface: per region, the ordered nation roster plus each region's
@@ -1597,8 +1594,7 @@ ORDER BY r_name
 
 
 # --------------------------------------------------------------------------
-# q45: DataFrame.transpose (SPARK-49128, Spark 4.0) (oracle-parity-tested in
-# test_round7_ops.py::test_q45_matches_duckdb_oracle).
+# q45: DataFrame.transpose (SPARK-49128, Spark 4.0).
 #
 # The frame-flip API: a (priority × metric) summary table transposed
 # to (metric × priority) — the report orientation, computed engine-side
@@ -1669,9 +1665,7 @@ ORDER BY metric
 
 
 # --------------------------------------------------------------------------
-# q46: DataFrame.lateralJoin API (SPARK-46794, Spark 4.0)
-# (oracle-parity-tested in
-# test_round7_ops.py::test_q46_matches_duckdb_oracle).
+# q46: DataFrame.lateralJoin API (SPARK-46794, Spark 4.0).
 #
 # v06/v09 cover SQL LATERAL; this is the DataFrame-side spelling: the
 # right side references the CURRENT left row via Column.outer(), so
@@ -1721,8 +1715,7 @@ ORDER BY r_name, n_customers DESC, n_name
 
 
 # --------------------------------------------------------------------------
-# u08: iterator-of-series pandas UDF (SCALAR_ITER) (oracle-parity-tested in
-# test_round7_ops.py::test_u08_matches_duckdb_oracle).
+# u08: iterator-of-series pandas UDF (SCALAR_ITER).
 #
 # The evaluation mode built for batch model INFERENCE: the function
 # receives an ITERATOR of Arrow batches per worker, so expensive state
@@ -1771,8 +1764,7 @@ ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# u09: pandas UDAF as a WINDOW function (oracle-parity-tested in
-# test_round7_ops.py::test_u09_matches_duckdb_oracle).
+# u09: pandas UDAF as a WINDOW function.
 #
 # u01 runs the grouped-agg pandas UDF in groupBy; the same kernel also
 # evaluates OVER a bounded window frame — custom rolling statistics
@@ -1833,8 +1825,7 @@ ORDER BY o_custkey, o_orderkey
 
 
 # --------------------------------------------------------------------------
-# q47: time-series gap fill with forward fill (oracle-parity-tested in
-# test_round7_ops.py::test_q47_matches_duckdb_oracle).
+# q47: time-series gap fill with forward fill.
 #
 # The resampling primitive the window suite lacked: per-user HOURLY
 # buckets are materialized as a complete spine (sequence over the

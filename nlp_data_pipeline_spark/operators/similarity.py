@@ -761,7 +761,7 @@ def _s09_assign(
     - declared (k ≤ _S09_ASSIGN_MAXBY_K, use_arrow not forced):
       broadcast nested-loop join + row_number window — n·k scored rows
       shuffle into the per-vec_id sort. Bit-exact vs the DuckDB oracle.
-    - max_by (k above the cap, numpy unavailable or use_arrow=False):
+    - max_by (k above the cap and use_arrow=False):
       the SAME join feeds a map-side-combined max_by aggregate, so the
       shuffle carries n partial maxima instead of n·k scored rows (at
       2M vectors × 4000 centroids: an n-row hash aggregate vs a ~4 TB
@@ -769,12 +769,12 @@ def _s09_assign(
       argmax the window's (cos DESC, centroid_id ASC) row_number picks,
       NaN ordering included — test_s09_maxby_assignment_parity. Exact
       but still pays the per-pair fold cost.
-    - arrow (k above the cap and numpy importable, or use_arrow=True):
+    - arrow (k above the cap with use_arrow=None, or use_arrow=True):
       _s09_assign_arrow — matmul throughput, the tier the round-13
       1000x probe executes.
     """
     if use_arrow is None:
-        use_arrow = k > _S09_ASSIGN_MAXBY_K and _has_numpy()
+        use_arrow = k > _S09_ASSIGN_MAXBY_K
     if use_arrow:
         _log_tier("s09_assign", "arrow")
         return _s09_assign_arrow(e, cents)
@@ -808,28 +808,19 @@ def _s09_assign(
     )
 
 
-def _has_numpy() -> bool:
-    try:
-        import numpy  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 _LOG = logging.getLogger("nlp_data_pipeline_spark.similarity")
 
 
 def _log_tier(op: str, tier: str) -> None:
     """Record which kernel tier an auto-selecting operator chose.
 
-    With ``use_arrow=None`` the Arrow/Catalyst choice depends on numpy
-    importability in the environment (ADVICE r13): the Arrow float64
-    matmul and the Catalyst higher-order fold differ only in float
-    summation order (~1 ulp), which can flip a verdict solely on a
-    cosine tie exactly at the tau boundary. Logging the selected tier
-    makes any such environment-dependent flip diagnosable from the run
-    log instead of invisible.
+    With ``use_arrow=None`` the Arrow/Catalyst choice depends on the
+    input size and the caller's arguments (ADVICE r13): the Arrow
+    float64 matmul and the Catalyst higher-order fold differ only in
+    float summation order (~1 ulp), which can flip a verdict solely on
+    a cosine tie exactly at the tau boundary. Logging the selected tier
+    makes any such flip diagnosable from the run log instead of
+    invisible.
     """
     _LOG.info("%s kernel tier: %s", op, tier)
 
@@ -892,14 +883,14 @@ def s09_semantic_dedup(
 
     Kernel-tier note (ADVICE r13): with ``use_arrow=None`` the
     assignment and small-cluster-count kernels auto-select the Arrow
-    BLAS tier when numpy is importable (above _S09_ASSIGN_MAXBY_K for
-    assignment; always for capped counts). Arrow and Catalyst tiers
-    differ only in float summation order (~1 ulp), so a keep/drop
-    verdict can differ across environments ONLY for a pair whose
-    cosine ties exactly at NEARDUP_TAU — parity is pinned on the test
-    corpus (test_s09_arrow_assignment_parity) and the selected tier is
-    logged per run via _log_tier for auditability. Pass use_arrow
-    explicitly to pin the kernel regardless of environment.
+    BLAS tier (above _S09_ASSIGN_MAXBY_K for assignment; always for
+    capped counts). Arrow and Catalyst tiers differ only in float
+    summation order (~1 ulp), so a keep/drop verdict can differ between
+    tiers ONLY for a pair whose cosine ties exactly at NEARDUP_TAU —
+    parity is pinned on the test corpus
+    (test_s09_arrow_assignment_parity) and the selected tier is logged
+    per run via _log_tier for auditability. Pass use_arrow=False to
+    pin the Catalyst kernels.
     """
     k = N_CENTROIDS if n_centroids is None else n_centroids
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -938,7 +929,7 @@ def s09_semantic_dedup(
         )
         sized = assigned.join(stats, "centroid_id")
         sm = sized.filter(F.col("c_size") <= cluster_cap)
-        if use_arrow or (use_arrow is None and _has_numpy()):
+        if use_arrow is not False:
             _log_tier("s09_small_cluster_counts", "arrow")
             counts_small = _s09_small_cluster_counts_arrow(sm, NEARDUP_TAU)
         else:
@@ -1386,8 +1377,7 @@ S12_SQL = _s12_sql()
 
 
 # --------------------------------------------------------------------------
-# s13: RADIUS (range) search (oracle-parity-tested in
-# test_round6_ops.py::test_s13_matches_duckdb_oracle).
+# s13: RADIUS (range) search.
 #
 # The third retrieval modality beside top-k (s01/s07) and all-pairs
 # (s02): return EVERY corpus vector within a similarity radius of each
@@ -1444,8 +1434,7 @@ ORDER BY query_id, vec_id
 
 
 # --------------------------------------------------------------------------
-# s14: INT8 scalar-quantized search (oracle-parity-tested in
-# test_round6_ops.py::test_s14_matches_duckdb_oracle).
+# s14: INT8 scalar-quantized search.
 #
 # The OTHER production ANN compression beside PQ (s10/s11): per-
 # dimension min/max scalar quantization to int8 codes — 4× bandwidth
@@ -1576,9 +1565,7 @@ ORDER BY query_id, nn_rank
 
 
 # --------------------------------------------------------------------------
-# s15: reciprocal-rank fusion of two retrieval rankings
-# (oracle-parity-tested in
-# test_round7_ops.py::test_s15_matches_duckdb_oracle).
+# s15: reciprocal-rank fusion of two retrieval rankings.
 #
 # The hybrid-retrieval combinator every RAG / training-data retrieval
 # stack runs: rank candidates under MULTIPLE scorers and fuse with
@@ -1689,8 +1676,7 @@ ORDER BY query_id, fused_rank
 
 
 # --------------------------------------------------------------------------
-# s16: graph-based ANN (NSW shape) (oracle-parity-tested in
-# test_round7_ops.py::test_s16_matches_duckdb_oracle).
+# s16: graph-based ANN (NSW shape).
 #
 # The third ANN index family beside LSH (s03) and IVF (s04/s07): a
 # neighbor GRAPH + greedy beam search, the HNSW/NSW idea that wins
@@ -1868,13 +1854,12 @@ NND_ROUNDS = 1
 NND_BLOCK_TARGET = 256  # vectors per cluster-local seed block
 NND_ASSIGN_PROBE = 2  # clusters each vector seeds into (IVF multi-probe)
 # Seed tier (round 15, VERDICT r14 #1): the fused Arrow seed-pack
-# (_nnd_seed_pack_arrow) is the default whenever numpy is present —
-# at every scale it replaces the window-tier assignment (whose
-# n·k_build = n²/256 HOF-fold cosines through a per-vec_id sort were
-# the round-13 escalation hazard) AND the assignment ⋈ embeddings
-# sort-merge join with one chunked-BLAS map stage + one groupBy(cid).
-# numpy is imported unconditionally before the tier branch, so the window
-# tier is not a runtime fallback: it survives as the reference that
+# (_nnd_seed_pack_arrow) is the only tier _nnd_state runs — at every
+# scale it replaces the window-tier assignment (whose n·k_build =
+# n²/256 HOF-fold cosines through a per-vec_id sort were the round-13
+# escalation hazard) AND the assignment ⋈ embeddings sort-merge join
+# with one chunked-BLAS map stage + one groupBy(cid). The window tier
+# (_nnd_seed_pack_window) is kept as the reference that
 # test_nnd_seed_pack_arrow_parity checks the fused tier against.
 _KNUTH = 2654435761
 
@@ -1943,6 +1928,39 @@ def _nnd_seed_pack_arrow(e: DataFrame, cents: DataFrame, probe: int) -> DataFram
     vecs = F.collect_list(F.struct("vec_id", "emb")).alias("vecs")
     return (
         assigned.groupBy("cid")
+        .agg(vecs)
+        .select(
+            F.transform("vecs", lambda v: v["vec_id"]).alias("ids"),
+            F.flatten(F.transform("vecs", lambda v: v["emb"])).alias("flat"),
+        )
+    )
+
+
+def _nnd_seed_pack_window(e: DataFrame, cents: DataFrame, probe: int) -> DataFrame:
+    """The window-join seed tier: top-``probe`` assignment by a
+    (ccos DESC, cid ASC) row_number window, then assignment ⋈
+    embeddings packed per cid. No query runs it; it is the reference
+    test_nnd_seed_pack_arrow_parity checks _nnd_seed_pack_arrow
+    against."""
+    ccos = dot("cemb", "emb") / (norm("cemb") * norm("emb"))
+    wassign = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cid"))
+    assign = (
+        e.join(F.broadcast(cents))
+        .select("vec_id", "cid", ccos.alias("ccos"))
+        .withColumn("r", F.row_number().over(wassign))
+        .filter(F.col("r") <= probe)
+        .select("vec_id", "cid")
+    )
+    vecs = F.collect_list(F.struct("vec_id", "emb")).alias("vecs")
+    return (
+        # assignment ⋈ embeddings: both corpus-sized (ADVICE-r09 rule) —
+        # force sort-merge. Catalyst's file-bytes estimate put the
+        # 2M-row embedding side under the 64 MB broadcast threshold at
+        # 1000x (rep-ordered staging compresses ~10x) and the ~1.5 GB
+        # deserialized broadcast OOMed an already-loaded driver heap
+        # (round-14 refine probe).
+        assign.join(e.hint("merge"), "vec_id")
+        .groupBy("cid")
         .agg(vecs)
         .select(
             F.transform("vecs", lambda v: v["vec_id"]).alias("ids"),
@@ -2184,42 +2202,10 @@ def _nnd_state(
     import numpy as np
     import pandas as pd
 
-    if _has_numpy():
-        # fused Arrow seed-pack (round 15): assignment and pack in one
-        # map stage + one groupBy(cid) — see _nnd_seed_pack_arrow.
-        _log_tier("nnd_seed", "fused-arrow")
-        packed = _nnd_seed_pack_arrow(e, cents, NND_ASSIGN_PROBE)
-    else:
-        _log_tier("nnd_seed", "window-join")
-        ccos = dot("cemb", "emb") / (norm("cemb") * norm("emb"))
-        wassign = Window.partitionBy("vec_id").orderBy(
-            F.desc("ccos"), F.asc("cid")
-        )
-        assign = (
-            e.join(F.broadcast(cents))
-            .select("vec_id", "cid", ccos.alias("ccos"))
-            .withColumn("r", F.row_number().over(wassign))
-            .filter(F.col("r") <= NND_ASSIGN_PROBE)
-            .select("vec_id", "cid")
-        )
-        vecs = F.collect_list(F.struct("vec_id", "emb")).alias("vecs")
-        packed = (
-            # assignment ⋈ embeddings: both corpus-sized (ADVICE-r09
-            # rule) — force sort-merge. Catalyst's file-bytes estimate
-            # put the 2M-row embedding side under the 64 MB broadcast
-            # threshold at 1000x (rep-ordered staging compresses ~10x)
-            # and the ~1.5 GB deserialized broadcast OOMed an
-            # already-loaded driver heap (round-14 refine probe).
-            assign.join(e.hint("merge"), "vec_id")
-            .groupBy("cid")
-            .agg(vecs)
-            .select(
-                F.transform("vecs", lambda v: v["vec_id"]).alias("ids"),
-                F.flatten(F.transform("vecs", lambda v: v["emb"])).alias(
-                    "flat"
-                ),
-            )
-        )
+    # fused Arrow seed-pack (round 15): assignment and pack in one map
+    # stage + one groupBy(cid) — see _nnd_seed_pack_arrow.
+    _log_tier("nnd_seed", "fused-arrow")
+    packed = _nnd_seed_pack_arrow(e, cents, NND_ASSIGN_PROBE)
 
     def block_topm(batches):
         for pdf in batches:
@@ -2288,7 +2274,7 @@ def _nnd_state(
     # rounds executable at that scale too (probe_nnd_refine_1000x).
     n_rounds = NND_ROUNDS if rounds is None else rounds
     if refine_packed is None:
-        refine_packed = n > _NND_REFINE_PACKED_N and _has_numpy()
+        refine_packed = n > _NND_REFINE_PACKED_N
     if n_rounds > 0:
         _log_tier("nnd_refine", "packed" if refine_packed else "pair-join")
     for r in range(n_rounds):
@@ -2438,9 +2424,7 @@ ORDER BY query_id
 
 
 # --------------------------------------------------------------------------
-# s17: one Lloyd refinement step for IVF centroid training
-# (oracle-parity-tested in
-# test_round7_ops.py::test_s17_matches_duckdb_oracle).
+# s17: one Lloyd refinement step for IVF centroid training.
 #
 # s04/s07 assume a FIXED centroid set; real IVF indexes train theirs
 # with k-means. Declared surface: seed with the first K vectors (s04's
@@ -2577,8 +2561,7 @@ ORDER BY centroid_id
 
 
 # --------------------------------------------------------------------------
-# s18: MMR diversified retrieval (oracle-parity-tested in
-# test_round7_ops.py::test_s18_matches_duckdb_oracle).
+# s18: MMR diversified retrieval.
 #
 # Maximal Marginal Relevance re-ranking: after s01-style top-N
 # candidate generation, greedily pick K results maximizing
@@ -2714,8 +2697,7 @@ ORDER BY query_id, pick
 
 
 # --------------------------------------------------------------------------
-# s19: PageRank centrality on the kNN similarity graph (oracle-parity-tested
-# in test_round7_ops.py::test_s19_matches_duckdb_oracle).
+# s19: PageRank centrality on the kNN similarity graph.
 #
 # The iterative-graph-algorithm family (beside d06's label-propagation
 # components and s17's Lloyd steps): 3 power iterations of damped
@@ -2824,8 +2806,7 @@ ORDER BY p.vec_id
 
 
 # --------------------------------------------------------------------------
-# s20: IVF operating curve (recall@k vs nprobe) (oracle-parity-tested in
-# test_round7_ops.py::test_s20_matches_duckdb_oracle).
+# s20: IVF operating curve (recall@k vs nprobe).
 #
 # The tuning surface behind every IVF deployment decision: s07 runs
 # ONE probe width; this sweeps nprobe ∈ {{1,2,4,8}} in a single plan

@@ -411,8 +411,7 @@ ORDER BY s.m
 
 
 # --------------------------------------------------------------------------
-# v08: SQL-language scalar UDF (oracle-parity-tested in
-# test_round6_ops.py::test_v08_matches_duckdb_oracle).
+# v08: SQL-language scalar UDF.
 #
 # Spark 4's `CREATE FUNCTION ... RETURN <expr>` (SQL UDFs,
 # SPARK-46087): the function body is INLINED into the plan by the
@@ -466,8 +465,7 @@ ORDER BY l_returnflag, band
 
 
 # --------------------------------------------------------------------------
-# v09: SQL TABLE function + LATERAL correlation (oracle-parity-tested in
-# test_round6_ops.py::test_v09_matches_duckdb_oracle).
+# v09: SQL TABLE function + LATERAL correlation.
 #
 # Spark 4's `CREATE FUNCTION ... RETURNS TABLE` (SQL UDTF): a
 # parameterized relation the analyzer inlines per call site, here
@@ -519,8 +517,7 @@ ORDER BY priority, rnk
 
 
 # --------------------------------------------------------------------------
-# v10: SQL PIPE syntax (oracle-parity-tested in
-# test_round6_ops.py::test_v10_matches_duckdb_oracle).
+# v10: SQL PIPE syntax.
 #
 # Spark 4's pipe operator syntax (SPARK-49555, `|>`): linear
 # FROM → WHERE → EXTEND → AGGREGATE … GROUP BY → ORDER BY chains that
@@ -559,8 +556,7 @@ ORDER BY lang, source
 
 
 # --------------------------------------------------------------------------
-# v11: parameterized SQL + IDENTIFIER clause (oracle-parity-tested in
-# test_round6_ops.py::test_v11_matches_duckdb_oracle).
+# v11: parameterized SQL + IDENTIFIER clause.
 #
 # Spark's named-parameter binding (`spark.sql(text, args={...})`,
 # SPARK-41271) + the IDENTIFIER clause (SPARK-43205): values bind as
@@ -605,8 +601,7 @@ ORDER BY o_orderpriority
 
 
 # --------------------------------------------------------------------------
-# v12: GROUP BY ALL / ORDER BY ALL (oracle-parity-tested in
-# test_round6_ops.py::test_v12_matches_duckdb_oracle).
+# v12: GROUP BY ALL / ORDER BY ALL.
 #
 # The analyst-ergonomics syntax (SPARK-41440): grouping keys inferred
 # as every non-aggregate select item, ordering as the full select
@@ -640,8 +635,7 @@ ORDER BY lang, source, n_docs, total_chars
 
 
 # --------------------------------------------------------------------------
-# v13: SQL scripting (Spark 4, SPARK-48338) (oracle-parity-tested in
-# test_round7_ops.py::test_v13_matches_duckdb_oracle).
+# v13: SQL scripting (Spark 4, SPARK-48338).
 #
 # BEGIN…END procedural SQL: DECLARE a variable, WHILE-loop doubling a
 # price threshold until fewer than 100 orders exceed it, return the
@@ -688,8 +682,7 @@ ORDER BY thr LIMIT 1
 
 
 # --------------------------------------------------------------------------
-# v14: pandas API on Spark (pyspark.pandas) (oracle-parity-tested in
-# test_round7_ops.py::test_v14_matches_duckdb_oracle).
+# v14: pandas API on Spark (pyspark.pandas).
 #
 # The engine's THIRD front door beside the DataFrame DSL and
 # spark.sql(): pandas-shaped code (groupby/agg/reset_index) that plans
@@ -740,9 +733,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# v15: SQL session variables (DECLARE VARIABLE / SET VAR)
-# (oracle-parity-tested in
-# test_round7_ops.py::test_v15_matches_duckdb_oracle).
+# v15: SQL session variables (DECLARE VARIABLE / SET VAR).
 #
 # The session-state surface scripting (v13) builds on, usable from
 # plain multi-statement SQL: DECLARE a typed variable, SET it from a
@@ -785,9 +776,7 @@ ORDER BY o_orderpriority
 
 
 # --------------------------------------------------------------------------
-# v16: POLYMORPHIC Python UDTF (static analyze, SPARK-44503)
-# (oracle-parity-tested in
-# test_round7_ops.py::test_v16_matches_duckdb_oracle).
+# v16: POLYMORPHIC Python UDTF (static analyze, SPARK-44503).
 #
 # u05 covers the fixed-schema Arrow UDTF; this covers the half the
 # API adds on top: `analyze()` computes the OUTPUT SCHEMA from the
@@ -849,8 +838,7 @@ LIMIT 20
 
 
 # --------------------------------------------------------------------------
-# v17: UDTF with a TABLE argument (SPARK-44233) (oracle-parity-tested in
-# test_round7_ops.py::test_v17_matches_duckdb_oracle).
+# v17: UDTF with a TABLE argument (SPARK-44233).
 #
 # The table-valued INPUT half of the UDTF surface (v03/u05/v16 cover
 # scalar-argument UDTFs): `my_udtf(TABLE(t) PARTITION BY k)` streams

@@ -1990,8 +1990,7 @@ ORDER BY doc_id, chunk_idx
 
 
 # --------------------------------------------------------------------------
-# t33: readability / curriculum-difficulty scoring (oracle-parity-tested in
-# test_round6_ops.py::test_t33_matches_duckdb_oracle).
+# t33: readability / curriculum-difficulty scoring.
 #
 # Flesch-reading-ease with a deterministic vowel-group syllable
 # heuristic — the curriculum-ordering signal (easy→hard schedules) and
@@ -2055,8 +2054,7 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# t34: BPE merge-pair counting (oracle-parity-tested in
-# test_round6_ops.py::test_t34_matches_duckdb_oracle).
+# t34: BPE merge-pair counting.
 #
 # The first iteration of byte-pair-encoding tokenizer training: count
 # adjacent symbol pairs across the corpus and surface the top merge
@@ -2300,8 +2298,7 @@ def bpe_encode_counts(
 
 
 # --------------------------------------------------------------------------
-# t35: deterministic global shuffle + shard assignment (oracle-parity-tested
-# in test_round6_ops.py::test_t35_matches_duckdb_oracle).
+# t35: deterministic global shuffle + shard assignment.
 #
 # The pre-training data-order step: give every document a seeded
 # pseudo-random position so training sees a reproducible global
@@ -2421,8 +2418,7 @@ ORDER BY c.doc_id
 
 
 # --------------------------------------------------------------------------
-# t36: corpus-wide sentence dedup (oracle-parity-tested in
-# test_round6_ops.py::test_t36_matches_duckdb_oracle).
+# t36: corpus-wide sentence dedup.
 #
 # The C4 curation step d11's WITHIN-doc span dedup does not cover:
 # remove every repeat of a sentence ACROSS the whole corpus, keeping
@@ -2491,8 +2487,7 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# t37: vocabulary coverage / OOV rate (oracle-parity-tested in
-# test_round6_ops.py::test_t37_matches_duckdb_oracle).
+# t37: vocabulary coverage / OOV rate.
 #
 # The tokenizer-coverage diagnostic: fix the top-V corpus vocabulary
 # (frequency-desc, token-asc tie-break — a deterministic stand-in for
@@ -2561,8 +2556,7 @@ ORDER BY n.doc_id
 
 
 # --------------------------------------------------------------------------
-# t39: PMI-ranked collocations (oracle-parity-tested in
-# test_round7_ops.py::test_t39_matches_duckdb_oracle).
+# t39: PMI-ranked collocations.
 #
 # The association measure BPE's raw pair frequency (t34) is blind to:
 # pointwise mutual information log2(p(ab) / (p(a)·p(b))) ranks bigrams
@@ -2760,8 +2754,7 @@ ORDER BY pct
 
 
 # --------------------------------------------------------------------------
-# t40: distributed OLS via sufficient statistics (oracle-parity-tested in
-# test_round8_ops.py::test_t40_matches_duckdb_oracle).
+# t40: distributed OLS via sufficient statistics.
 #
 # The trainable-quality-model primitive (fasttext-style filters,
 # perplexity regressors): fit y = b0 + b1*x1 + b2*x2 by least squares
@@ -2880,8 +2873,7 @@ stats AS (SELECT {_T40_STATS_SQL} FROM feats)
 
 
 # --------------------------------------------------------------------------
-# t42: bigram-LM surprisal flags (oracle-parity-tested in
-# test_round8_ops.py::test_t42_matches_duckdb_oracle).
+# t42: bigram-LM surprisal flags.
 #
 # Language-model-based quality filtering (the CCNet/Gopher "perplexity
 # gate") WITHOUT the cross-engine libm hazard of summed log-probs: a
@@ -2992,8 +2984,7 @@ LIMIT {_T42_TOP}
 
 
 # --------------------------------------------------------------------------
-# t44: source temperature-sampling weights (oracle-parity-tested in
-# test_round8_ops.py::test_t44_matches_duckdb_oracle).
+# t44: source temperature-sampling weights.
 #
 # The multilingual/multi-source mixing rule (mT5/XLM-R style): sample
 # source s proportional to p_s^α so small sources are upweighted
@@ -3055,8 +3046,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# t43: quality-score batch inference (oracle-parity-tested in
-# test_round8_ops.py::test_t43_matches_duckdb_oracle). The deploy half
+# t43: quality-score batch inference. The deploy half
 # of t40's train half: re-derive the OLS model from the same one-pass
 # sufficient statistics, broadcast the 1-row UNROUNDED coefficient
 # relation, and score every document in-scan — the fasttext-style

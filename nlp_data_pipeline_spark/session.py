@@ -22,6 +22,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
+# The directory holding this package. Python workers import the package
+# (every mapInPandas/UDF kernel does), so their path must reach it from
+# any working directory, without a PYTHONPATH set by the caller.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "nlp_data_pipeline_spark",
@@ -76,6 +81,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- Arrow for any pandas_udf / toPandas boundary ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # --- shuffle sizing (cluster deployments raise this; AQE coalesces) ---
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # keep parquet scans splittable and pruned

@@ -1,21 +1,11 @@
-"""Driver-contract smoke tests: entry() shape, queries()/oracle_sql()
-key discipline, and a fast sf0.001 oracle sweep for the pure-SQL ops."""
+"""Driver-contract tests: entry() shape, queries()/oracle_sql() key
+discipline, and the oracle sweep: every declared query against its
+DuckDB oracle at sf0.001."""
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-from nlp_data_pipeline_spark.sources.catalog import TABLE_NAMES
-
-FAST_ORACLE_QUERIES = [
-    "q01_pricing_summary",
-    "q10_topk_customers_per_nation",
-    "t01_token_freq_top10",
-    "d04_simhash",
-    "s01_cosine_topk",
-    "e02_session_windows",
-    "m02_decode_stub_pipeline",
-]
+from oracle_parity import EMPTY_AT_SF0001, ORACLES, ends_in_order_by
 
 
 def test_entry_returns_rows(spark):
@@ -31,6 +21,7 @@ def test_oracle_keys_subset_of_queries():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     assert set(oracles) <= set(qs)
+    assert EMPTY_AT_SF0001 <= set(oracles)
     assert len(qs) >= 40
     # per module: every oracle has its query, and no query name is declared
     # by two modules (the aggregate's dict update would silently keep only
@@ -66,28 +57,20 @@ def test_rotation_puts_never_green_queries_first():
         assert last_red < first_green
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
+def test_ends_in_order_by():
+    assert ends_in_order_by("SELECT a FROM t ORDER BY a LIMIT 3")
+    assert ends_in_order_by("WITH x AS (SELECT 1) SELECT a FROM x ORDER BY f(a) DESC, b")
+    assert not ends_in_order_by("SELECT a FROM (SELECT a FROM t ORDER BY a)")
+    assert not ends_in_order_by("SELECT row_number() OVER (ORDER BY a) FROM t")
+    assert not ends_in_order_by("SELECT a FROM t ORDER BY a UNION ALL SELECT b FROM u")
+    assert not ends_in_order_by("SELECT 'ORDER BY' AS s FROM t -- ORDER BY s")
 
 
-@pytest.mark.parametrize("name", FAST_ORACLE_QUERIES)
-def test_fast_oracle_equivalence(spark, sf_dir, duck, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check_oracle import compare
-
-    sdf = entry_mod.queries()[name](spark, sf_dir)
-    res = duck.execute(entry_mod.oracle_sql()[name])
-    cols = [d[0] for d in res.description]
-    issues = compare(name, sdf, res.fetchall(), cols)
-    assert issues == [], issues
+@pytest.mark.parametrize("name", list(ORACLES))
+def test_oracle_equivalence(oracle_check, name):
+    """Every oracle-backed query passes the shared DuckDB parity check
+    (oracle_parity.OracleCheck)."""
+    oracle_check(name)
 
 
 def test_rows_only_set_is_exactly_the_sanctioned_three():

@@ -6,32 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _duck(sf_dir, views=("documents",)):
-    import duckdb
-
-    con = duckdb.connect()
-    for v in views:
-        con.execute(
-            f"CREATE VIEW {v} AS SELECT * FROM read_parquet('{sf_dir}/{v}.parquet')"
-        )
-    return con
-
-
-def test_d18_matches_duckdb_oracle(spark, sf_dir):
-    """d18 runs min-label propagation over STAR-capped LSH pairs
-    (cap=2, the tightest setting); its oracle is D06_SQL — DuckDB's
-    recursive closure over the FULL clique pairs. Row equality is the
-    component-equivalence proof on real corpus data."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D18_SQL,
-        d18_capped_lsh_components,
-    )
-
-    got = sorted(tuple(r) for r in d18_capped_lsh_components(spark, sf_dir).collect())
-    want = sorted(tuple(r) for r in _duck(sf_dir).execute(D18_SQL).fetchall())
-    assert got == want and len(got) > 0
-
-
 def test_d18_star_path_fires_at_test_sf(spark, sf_dir):
     """The equivalence proof must not be vacuous: at the test sf some
     buckets exceed the declared cap, so the capped relation is a STRICT
@@ -140,3 +114,12 @@ def test_s33_booleans_flip_when_floor_exceeds_measured(spark, sf_dir, monkeypatc
     monkeypatch.setattr(similarity, "S33_MIN_PCT", 101)
     row = similarity.s33_mutual_knn_nnd_recall(spark, sf_dir).collect()[0]
     assert row["recall_ok"] is False and row["precision_ok"] is False
+
+
+# Named DuckDB parity checks: each runs the shared oracle check
+# (conftest.oracle_check) for one query; a query the sweep in
+# test_entry_contract.py already passed is not run again.
+
+
+def test_d18_matches_duckdb_oracle(oracle_check):
+    oracle_check("d18_capped_lsh_components")

@@ -145,33 +145,6 @@ def test_remaining_chain_runs_end_to_end_under_cap(spark, adv_dir):
 # MinMaxScaler — the second and third value-exact pyspark.ml FITS
 # behind n05 (VERDICT r10 "What's missing" #1).
 # ---------------------------------------------------------------------------
-def _duck(sf_dir, views):
-    import duckdb
-
-    con = duckdb.connect()
-    for v in views:
-        con.execute(
-            f"CREATE VIEW {v} AS SELECT * FROM read_parquet('{sf_dir}/{v}.parquet')"
-        )
-    return con
-
-
-def test_n06_matches_duckdb_oracle(spark, sf_dir):
-    """The fitted StringIndexerModel's labelsArray over (lang, source)
-    equals the SQL ranking cnt DESC, label ASC — value-for-value, the
-    driver-style check."""
-    from nlp_data_pipeline_spark.operators.nlp_model import (
-        N06_SQL,
-        n06_string_indexer_model,
-    )
-
-    got = sorted(tuple(r) for r in n06_string_indexer_model(spark, sf_dir).collect())
-    want = sorted(
-        tuple(r) for r in _duck(sf_dir, ["documents"]).execute(N06_SQL).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
 def test_n06_equal_frequency_ties_sort_alphabetically(spark):
     """The oracle's tie-break (label ASC on equal counts) is exactly
     MLlib's documented frequencyDesc behavior (SPARK-29750). Pin it on
@@ -184,30 +157,6 @@ def test_n06_equal_frequency_ties_sort_alphabetically(spark):
     )
     model = StringIndexer(inputCols=["k"], outputCols=["k_idx"]).fit(df)
     assert list(model.labelsArray[0]) == ["a", "b", "c"]
-
-
-def test_n07_matches_duckdb_oracle_bit_exact(spark, sf_dir):
-    """MinMaxScalerModel.originalMin/Max vs per-dim SQL MIN/MAX —
-    compared with EXACT float equality (min/max are selections over
-    identical float32 values widened to double; no tolerance needed)."""
-    from nlp_data_pipeline_spark.operators.nlp_model import (
-        N07_SQL,
-        n07_minmax_scaler_model,
-    )
-
-    got = {r["dim"]: r for r in n07_minmax_scaler_model(spark, sf_dir).collect()}
-    want = _duck(sf_dir, ["embeddings"]).execute(N07_SQL).fetchall()
-    assert len(got) == len(want) > 0
-    for dim, n_vecs, emb_min, emb_max, emb_range in want:
-        g = got[dim]
-        assert (
-            g["n_vecs"] == n_vecs
-            and g["emb_min"] == emb_min
-            and g["emb_max"] == emb_max
-            and g["emb_range"] == emb_range
-        )
-    # the fit's state is O(dim): one declared row per embedding dimension
-    assert len(got) == 64
 
 
 # ---------------------------------------------------------------------------
@@ -347,3 +296,16 @@ def test_s09_exact_duplicates_dedup_at_any_k(spark, dup_emb_dir):
                 .groupBy("centroid_id").count().agg(F.max("count")).collect()[0][0]
             )
             assert sizes <= base_sizes
+
+
+# Named DuckDB parity checks: each runs the shared oracle check
+# (conftest.oracle_check) for one query; a query the sweep in
+# test_entry_contract.py already passed is not run again.
+
+
+def test_n06_matches_duckdb_oracle(oracle_check):
+    oracle_check("n06_string_indexer_model")
+
+
+def test_n07_matches_duckdb_oracle_bit_exact(oracle_check):
+    oracle_check("n07_minmax_scaler_model")

@@ -273,11 +273,11 @@ def test_d32_cap_preserves_pileup_verdicts(spark, neardup_delta_dir):
 # Arrow stage and made it the default tier, VERDICT r14 #1).
 # ---------------------------------------------------------------------------
 def test_nnd_seed_pack_arrow_parity(spark, sf_dir, monkeypatch):
-    """The fused Arrow seed-pack (the default tier) reproduces the
-    whole NND state (top-m, graph, links) row-for-row vs the
-    window-join fallback: the masked argmax over cid-ascending columns
-    is exactly the window tier's (ccos DESC, cid ASC) order, and the
-    groupBy(cid) pack holds the same block membership as the
+    """The fused Arrow seed-pack (the tier _nnd_state runs) reproduces
+    the whole NND state (top-m, graph, links) row-for-row vs the
+    window-join reference tier: the masked argmax over cid-ascending
+    columns is exactly the window tier's (ccos DESC, cid ASC) order, and
+    the groupBy(cid) pack holds the same block membership as the
     assignment ⋈ embeddings join."""
     from nlp_data_pipeline_spark.operators.similarity import _nnd_state
 
@@ -289,9 +289,11 @@ def test_nnd_seed_pack_arrow_parity(spark, sf_dir, monkeypatch):
             sorted(tuple(r) for r in links.collect()),
         )
 
-    got = _g(_nnd_state(spark, sf_dir))  # fused-arrow (numpy present)
-    monkeypatch.setattr(similarity, "_has_numpy", lambda: False)
-    want = _g(_nnd_state(spark, sf_dir))  # window-join fallback tier
+    got = _g(_nnd_state(spark, sf_dir))  # fused-arrow
+    monkeypatch.setattr(
+        similarity, "_nnd_seed_pack_arrow", similarity._nnd_seed_pack_window
+    )
+    want = _g(_nnd_state(spark, sf_dir))  # window-join reference tier
     assert got == want and len(got[0]) > 0
 
 

@@ -99,7 +99,7 @@ def test_bpe_train_batch1_equals_sequential(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Round-11 staged trio (gate 10): t40 OLS, t42 bigram surprisal, t44
-# temperature mix — driver-style DuckDB parity + semantic invariants.
+# temperature mix — semantic invariants.
 # ---------------------------------------------------------------------------
 def _duck(sf_dir, views=("documents",)):
     import duckdb
@@ -110,20 +110,6 @@ def _duck(sf_dir, views=("documents",)):
             f"CREATE VIEW {v} AS SELECT * FROM read_parquet('{sf_dir}/{v}.parquet')"
         )
     return con
-
-
-def test_t40_matches_duckdb_oracle(spark, sf_dir):
-    """t40 distributed OLS via exact-integer sufficient statistics is
-    STAGED for round-11 declaration; the Cramer solve over the shared
-    fixed expression tree must match DuckDB bit-for-bit at 6 dp."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T40_SQL,
-        t40_ols_sufficient_stats,
-    )
-
-    got = [tuple(r) for r in t40_ols_sufficient_stats(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T40_SQL).fetchall()]
-    assert len(got) == 1 and got == want
 
 
 def test_t40_fit_is_sane(spark, sf_dir):
@@ -163,19 +149,6 @@ def test_t40_exact_recompute(spark, sf_dir):
     assert abs(row["b2"] - beta[2]) < 1e-4
 
 
-def test_t42_matches_duckdb_oracle(spark, sf_dir):
-    """t42 bigram surprisal is STAGED for round-11 declaration; the
-    integer-inequality surprise flags and per-doc rollup must match."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T42_SQL,
-        t42_bigram_surprisal,
-    )
-
-    got = [tuple(r) for r in t42_bigram_surprisal(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T42_SQL).fetchall()]
-    assert len(got) > 0 and got == want
-
-
 def test_t42_flags_match_python_lm(spark, sf_dir):
     """Recompute the add-1-smoothed bigram LM in pure Python and verify
     the per-doc surprising-bigram counts for the returned docs."""
@@ -211,19 +184,6 @@ def test_t42_flags_match_python_lm(spark, sf_dir):
         assert r["n_surprising"] == n_surp
 
 
-def test_t44_matches_duckdb_oracle(spark, sf_dir):
-    """t44 temperature-sampling mix is STAGED for round-11 declaration;
-    ÷ and sqrt are IEEE correctly rounded, so equality is exact."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T44_SQL,
-        t44_source_temperature_mix,
-    )
-
-    got = [tuple(r) for r in t44_source_temperature_mix(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T44_SQL).fetchall()]
-    assert len(got) > 0 and got == want
-
-
 def test_t44_upweights_small_sources(spark, sf_dir):
     """α=0.5 contract: oversample_rate = 1/sqrt(share), so the smallest
     source gets the largest rate, the largest source gets exactly 1.0,
@@ -244,21 +204,6 @@ def test_t44_upweights_small_sources(spark, sf_dir):
         assert r["oversample_rate"] == math.sqrt(
             by_n[-1]["n_tokens"] / r["n_tokens"]
         )
-
-
-def test_t43_matches_duckdb_oracle(spark, sf_dir):
-    """t43 quality-score batch inference is STAGED for round-11
-    declaration; coefficients come from the same unrounded fixed
-    expression tree as t40 and every residual is one fixed ±*/ tree
-    over exact-integer features, so the band counts are engine-exact."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T43_SQL,
-        t43_quality_score_inference,
-    )
-
-    got = [tuple(r) for r in t43_quality_score_inference(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T43_SQL).fetchall()]
-    assert len(got) >= 2 and got == want
 
 
 def test_t43_bands_partition_corpus(spark, sf_dir):
@@ -296,20 +241,6 @@ def test_t43_model_is_broadcast_not_shuffled(spark, sf_dir):
 # Round-11 staged join/layout ops (gate 10): q48 Z-order audit, q49
 # binned interval-overlap join, a05 Bloom semi-join.
 # ---------------------------------------------------------------------------
-def test_q48_matches_duckdb_oracle(spark, sf_dir):
-    """q48 Z-order layout audit is STAGED for round-11 declaration; the
-    Morton-bucketed span summary must match DuckDB exactly (all values
-    are exact-integer arithmetic + one exact division)."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q48_SQL,
-        q48_zorder_layout,
-    )
-
-    got = [tuple(r) for r in q48_zorder_layout(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir, views=("orders",)).execute(Q48_SQL).fetchall()]
-    assert len(got) == 2 and got == want
-
-
 def test_q48_zorder_bounds_both_dims(spark, sf_dir):
     """The layout claim itself: under the linear layout the leading key
     x is near-perfectly clustered but y spans nearly the full 0..255
@@ -322,23 +253,6 @@ def test_q48_zorder_bounds_both_dims(spark, sf_dir):
     assert lin.avg_x_span < zo.avg_x_span
     assert zo.avg_y_span < lin.avg_y_span
     assert zo.avg_y_span < 0.66 * lin.avg_y_span
-
-
-def test_q49_matches_duckdb_oracle(spark, sf_dir):
-    """q49 binned interval-overlap join is STAGED for round-11
-    declaration; the bin-equi-join + exact predicate must equal the
-    oracle's plain theta join."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q49_SQL,
-        q49_interval_overlap_join,
-    )
-
-    got = [tuple(r) for r in q49_interval_overlap_join(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("events",)).execute(Q49_SQL).fetchall()
-    ]
-    assert got == want
 
 
 def test_q49_is_not_cartesian(spark, sf_dir):
@@ -389,22 +303,6 @@ def test_q49_pairs_match_bruteforce(spark, sf_dir):
         assert per_user[r["user_id"]] == r["n_overlaps"]
 
 
-def test_a05_matches_duckdb_oracle(spark, sf_dir):
-    """a05 Bloom semi-join is STAGED for round-11 declaration; the md5
-    bit positions, candidate set, and fp accounting are engine-exact."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        A05_SQL,
-        a05_bloom_semijoin,
-    )
-
-    got = [tuple(r) for r in a05_bloom_semijoin(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("orders", "lineitem")).execute(A05_SQL).fetchall()
-    ]
-    assert len(got) == 1 and got == want
-
-
 def test_a05_bloom_has_no_false_negatives(spark, sf_dir):
     """The Bloom contract: every true build key is admitted
     (n_true == n_build_keys that appear on the probe side) and the fp
@@ -453,22 +351,6 @@ def test_a05_probe_side_filter_is_broadcast(spark, sf_dir):
 # Round-11 staged LLM-data ops (gate 10): s21 hard negatives, s22
 # label-centroid similarity, t45 token-budget water-filling.
 # ---------------------------------------------------------------------------
-def test_s21_matches_duckdb_oracle(spark, sf_dir):
-    """s21 hard-negative mining is STAGED for round-11 declaration; the
-    label-mismatch top-k must match the brute-force oracle exactly."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S21_SQL,
-        s21_hard_negative_mining,
-    )
-
-    got = [tuple(r) for r in s21_hard_negative_mining(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S21_SQL).fetchall()
-    ]
-    assert len(got) > 0 and sorted(got) == sorted(want)
-
-
 def test_s21_negatives_never_share_query_label(spark, sf_dir):
     """The contrastive contract: every mined negative carries a label
     different from its query's (which also excludes self-matches), and
@@ -491,23 +373,6 @@ def test_s21_negatives_never_share_query_label(spark, sf_dir):
         assert [r["neg_rank"] for r in rs] == list(range(1, NEG_TOP_K + 1))
         cosines = [r["cosine"] for r in rs]
         assert cosines == sorted(cosines, reverse=True)
-
-
-def test_s22_matches_duckdb_oracle(spark, sf_dir):
-    """s22 label-centroid similarity is STAGED for round-11
-    declaration; integer-quantized sums make the centroid matrix
-    engine-exact."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S22_SQL,
-        s22_label_centroid_similarity,
-    )
-
-    got = [tuple(r) for r in s22_label_centroid_similarity(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S22_SQL).fetchall()
-    ]
-    assert len(got) > 0 and got == want
 
 
 def test_s22_matches_numpy_centroids(spark, sf_dir):
@@ -534,20 +399,6 @@ def test_s22_matches_numpy_centroids(spark, sf_dir):
         a, b = cents[r["label_a"]], cents[r["label_b"]]
         true_cos = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
         assert abs(r["centroid_cosine"] - true_cos) < 1e-4
-
-
-def test_t45_matches_duckdb_oracle(spark, sf_dir):
-    """t45 token-budget water-filling is STAGED for round-11
-    declaration; all-integer arithmetic makes the allocation
-    engine-exact."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T45_SQL,
-        t45_token_budget_waterfill,
-    )
-
-    got = [tuple(r) for r in t45_token_budget_waterfill(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T45_SQL).fetchall()]
-    assert len(got) > 1 and got == want
 
 
 def test_t45_waterfill_invariants(spark, sf_dir):
@@ -608,39 +459,6 @@ def test_t45_waterfill_matches_python_solve(spark, sf_dir):
         assert r["allocated"] == alloc[idx], (r["source"], r["allocated"], alloc[idx])
 
 
-def test_q51_matches_duckdb_oracle(spark, sf_dir):
-    """q51 CBO stats-driven join is STAGED for round-11 declaration;
-    the declared aggregate is plan-independent and must match the plain
-    filtered-join oracle."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q51_SQL,
-        q51_cbo_stats_join,
-    )
-
-    got = [tuple(r) for r in q51_cbo_stats_join(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("orders", "lineitem"))
-        .execute(Q51_SQL)
-        .fetchall()
-    ]
-    assert len(got) == 1 and got == want
-
-
-def test_a06_matches_duckdb_oracle(spark, sf_dir):
-    """a06 KMV sketch is STAGED for round-11 declaration; the md5-based
-    sketch state AND estimate are engine-exact (no tolerance booleans
-    needed, unlike the HLL family)."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        A06_SQL,
-        a06_kmv_distinct_sketch,
-    )
-
-    got = [tuple(r) for r in a06_kmv_distinct_sketch(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(A06_SQL).fetchall()]
-    assert len(got) > 1 and got == want
-
-
 def test_a06_kth_hash_matches_python_recompute(spark, sf_dir):
     """The declared kth_hash IS the K-th smallest first-8-hex md5 over
     each source's distinct bigrams, and every estimate is within the
@@ -671,24 +489,6 @@ def test_a06_kth_hash_matches_python_recompute(spark, sf_dir):
         assert r["kth_hash"] == hashes[KMV_K - 1]
 
 
-def test_v18_matches_duckdb_oracle(spark, sf_dir):
-    """v18 three-valued-logic battery is STAGED for round-11
-    declaration; one shared ANSI text, engine-exact."""
-    from nlp_data_pipeline_spark.operators.sql_api import (
-        V18_SQL,
-        v18_null_semantics,
-    )
-
-    got = [tuple(r) for r in v18_null_semantics(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("orders", "customer"))
-        .execute(V18_SQL)
-        .fetchall()
-    ]
-    assert len(got) == 1 and got == want
-
-
 def test_v18_semantics_invariants(spark, sf_dir):
     """The battery's claims hold: NOT IN against a NULL-bearing set is
     empty; IN is unaffected by the extra NULL; partitioning by the
@@ -709,19 +509,6 @@ def test_v18_semantics_invariants(spark, sf_dir):
 # Round-12 staged ops (gate 11): t46 quality-threshold curve, s23
 # graph-ANN beam-width curve.
 # ---------------------------------------------------------------------------
-def test_t46_matches_duckdb_oracle(spark, sf_dir):
-    """t46 quality-threshold operating curve is STAGED for round-12
-    declaration; one scan, conditional sums, engine-exact counts."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T46_SQL,
-        t46_quality_threshold_curve,
-    )
-
-    got = [tuple(r) for r in t46_quality_threshold_curve(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T46_SQL).fetchall()]
-    assert len(got) == 5 and got == want
-
-
 def test_t46_curve_is_monotone_and_consistent(spark, sf_dir):
     """Operating-curve invariants: keep counts and kept tokens are
     non-increasing in the threshold, never exceed the corpus, and a
@@ -761,20 +548,6 @@ def test_t46_curve_is_monotone_and_consistent(spark, sf_dir):
         assert r["tokens_kept"] == sum(nw for q, nw in scored if q >= r["threshold"])
 
 
-def test_s23_matches_duckdb_oracle(spark, sf_dir):
-    """s23 beam-width curve is STAGED for round-12 declaration; the
-    declared surface is the graded recall_ok gates (s16's constant-
-    truth oracle pattern — SQL cannot run the graph walk)."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S23_SQL,
-        s23_beam_width_curve,
-    )
-
-    got = [tuple(r) for r in s23_beam_width_curve(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir, views=()).execute(S23_SQL).fetchall()]
-    assert len(got) == 3 and got == want
-
-
 def test_s23_all_beams_clear_their_floor(spark, sf_dir):
     """Every beam width clears its graded floor with the declared
     n_queries intact (margins measured 12-25 hits vs floors 1/10/15)."""
@@ -789,24 +562,6 @@ def test_s23_all_beams_clear_their_floor(spark, sf_dir):
     for r in rows:
         assert r["n_queries"] == N_QUERIES
         assert r["recall_ok"] is True
-
-
-def test_s24_matches_duckdb_oracle(spark, sf_dir):
-    """s24 topical source mix is STAGED for round-12 declaration; the
-    metadata-to-embedding join contingency is engine-exact."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S24_SQL,
-        s24_topical_source_mix,
-    )
-
-    got = [tuple(r) for r in s24_topical_source_mix(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("documents", "embeddings"))
-        .execute(S24_SQL)
-        .fetchall()
-    ]
-    assert len(got) > 0 and got == want
 
 
 def test_s24_contingency_invariants(spark, sf_dir):
@@ -829,20 +584,6 @@ def test_s24_contingency_invariants(spark, sf_dir):
         assert len(doms) == 1
         best = min(cells, key=lambda r: (-r["n_docs"], r["label"]))
         assert doms[0]["label"] == best["label"]
-
-
-def test_d20_matches_duckdb_oracle(spark, sf_dir):
-    """d20 Bloom-gated decontamination is STAGED for round-12
-    declaration; the portable-hash filter makes every tier count
-    engine-exact."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D20_SQL,
-        d20_bloom_decontamination,
-    )
-
-    got = [tuple(r) for r in d20_bloom_decontamination(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D20_SQL).fetchall()]
-    assert len(got) == 1 and got == want
 
 
 def test_d20_bloom_has_no_false_negatives(spark, sf_dir):
@@ -869,19 +610,6 @@ SELECT COUNT(DISTINCT doc_id), COUNT(*) FROM hits"""
     ).fetchone()
     assert r["n_contaminated"] == exact[0]
     assert r["n_pairs_true"] == exact[1]
-
-
-def test_t47_matches_duckdb_oracle(spark, sf_dir):
-    """t47 span-corruption plan is STAGED for round-12 declaration; the
-    deterministic hash mask makes every count engine-exact."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T47_SQL,
-        t47_span_corruption_plan,
-    )
-
-    got = [tuple(r) for r in t47_span_corruption_plan(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T47_SQL).fetchall()]
-    assert len(got) > 1 and got == want
 
 
 def test_t47_matches_python_mask_recompute(spark, sf_dir):
@@ -930,20 +658,6 @@ def test_t47_matches_python_mask_recompute(spark, sf_dir):
     assert abs(tot_masked / tot_tokens - _T47_RATE / _T47_MOD) < 0.02
 
 
-def test_m10_matches_duckdb_oracle(spark, sf_dir):
-    """m10 image patch grid is STAGED for round-12 declaration; exact
-    integer patch sums over the committed fixtures pin the decode +
-    pad + patchify pipeline against the closed-form VALUES oracle."""
-    from nlp_data_pipeline_spark.operators.multimodal import (
-        M10_SQL,
-        m10_image_patch_grid,
-    )
-
-    got = [tuple(r) for r in m10_image_patch_grid(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir, views=()).execute(M10_SQL).fetchall()]
-    assert len(got) == 22 and got == want
-
-
 def test_m10_patches_partition_each_image(spark, sf_dir):
     """Patchify invariants: the grid is dense (every (row, col) cell
     present exactly once per image, ceil-division extents), and the
@@ -968,23 +682,6 @@ def test_m10_patches_partition_each_image(spark, sf_dir):
             (y, x) for y in range(ph) for x in range(pw)
         ]
         assert sum(c["patch_sum"] for c in cells) == s["pixel_sum"]
-
-
-def test_q52_matches_duckdb_oracle(spark, sf_dir):
-    """q52 file-metadata layout audit is STAGED for round-12
-    declaration; the real landed layout must satisfy the one-file-per-
-    source contract the oracle states."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q52_SQL,
-        q52_file_metadata_audit,
-    )
-
-    got = [tuple(r) for r in q52_file_metadata_audit(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("documents",)).execute(Q52_SQL).fetchall()
-    ]
-    assert len(got) > 1 and got == want
 
 
 def test_q52_metadata_paths_carry_partition_value(spark, sf_dir):
@@ -1022,19 +719,6 @@ def test_q52_metadata_paths_carry_partition_value(spark, sf_dir):
     assert mismatches == 0
 
 
-def test_t48_matches_duckdb_oracle(spark, sf_dir):
-    """t48 packing-efficiency curve is STAGED for round-12 declaration;
-    all declared values are exact integers, engine-exact."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T48_SQL,
-        t48_packing_efficiency_curve,
-    )
-
-    got = [tuple(r) for r in t48_packing_efficiency_curve(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T48_SQL).fetchall()]
-    assert len(got) > 1 and got == want
-
-
 def test_t48_curve_invariants(spark, sf_dir):
     """Packing arithmetic: pad waste is a remainder (< seq_len), packs
     cover the token mass exactly (n_packs*L = total + padding), the
@@ -1057,22 +741,6 @@ def test_t48_curve_invariants(spark, sf_dir):
         ordered = sorted(cells, key=lambda c: c["seq_len"])
         for a, b in zip(ordered, ordered[1:]):
             assert a["n_packs"] >= b["n_packs"]
-
-
-def test_q53_matches_duckdb_oracle(spark, sf_dir):
-    """q53 batch sessionization is STAGED for round-12 declaration; the
-    native session_window aggregation must reproduce the lag+cumsum
-    oracle exactly, including the strictly-greater-than-gap closing rule."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q53_SQL,
-        q53_sessionize_batch,
-    )
-
-    got = [tuple(r) for r in q53_sessionize_batch(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(Q53_SQL).fetchall()
-    ]
-    assert len(got) > 1 and got == want
 
 
 def test_q53_sessions_partition_events(spark, sf_dir):
@@ -1111,23 +779,6 @@ def test_q53_sessions_partition_events(spark, sf_dir):
             assert b["session_start"] >= a["session_end"]
 
 
-def test_s25_matches_duckdb_oracle(spark, sf_dir):
-    """s25 mutual-kNN pairs is STAGED for round-12 declaration; the
-    declared cosine re-scores through the s01 fold helpers so both
-    engines compare identical float sequences."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S25_SQL,
-        s25_mutual_knn_pairs,
-    )
-
-    got = [tuple(r) for r in s25_mutual_knn_pairs(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S25_SQL).fetchall()
-    ]
-    assert len(got) > 1 and got == want
-
-
 def test_s25_pairs_are_mutual_and_subset_of_knn(spark, sf_dir):
     """The filter's defining property: every declared pair appears in
     BOTH directions of the exact directed top-M list, pairs are
@@ -1150,20 +801,6 @@ def test_s25_pairs_are_mutual_and_subset_of_knn(spark, sf_dir):
         assert (a, b) in knn and (b, a) in knn
     one_sided = {(min(a, b), max(a, b)) for a, b in knn}
     assert set(pairs) < one_sided
-
-
-def test_a07_matches_duckdb_oracle(spark, sf_dir):
-    """a07 hash-reservoir sample is STAGED for round-17 declaration
-    (moved back from gate 11 in the n05 pull-forward trade);
-    md5 draw keys are engine-identical so the sample is engine-exact."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        A07_SQL,
-        a07_reservoir_sample,
-    )
-
-    got = [tuple(r) for r in a07_reservoir_sample(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(A07_SQL).fetchall()]
-    assert len(got) > 1 and got == want
 
 
 def test_a07_sample_properties(spark, sf_dir):
@@ -1199,20 +836,6 @@ def test_a07_sample_properties(spark, sf_dir):
         assert [(r["draw"], r["doc_id"]) for r in got] == want
 
 
-def test_d21_matches_duckdb_oracle(spark, sf_dir):
-    """d21 split-contamination audit is STAGED for round-12
-    declaration; both split strategies count the same LSH pair set,
-    engine-exact."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D21_SQL,
-        d21_split_contamination_audit,
-    )
-
-    got = [tuple(r) for r in d21_split_contamination_audit(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D21_SQL).fetchall()]
-    assert len(got) > 1 and got == want
-
-
 def test_d21_cluster_split_never_leaks(spark, sf_dir):
     """The audit's point: the by_cluster strategy declares ZERO
     cross-split rows (d12 assigns near-dup components atomically),
@@ -1234,20 +857,6 @@ def test_d21_cluster_split_never_leaks(spark, sf_dir):
     for r in rows:
         assert r["split_a"] <= r["split_b"]
         assert r["is_cross"] == (r["split_a"] != r["split_b"])
-
-
-def test_d22_matches_duckdb_oracle(spark, sf_dir):
-    """d22 LSH banding operating curve is STAGED for round-12
-    declaration; every declared value is an integer count and the
-    near-dup truth test is pure integer arithmetic, engine-exact."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D22_SQL,
-        d22_lsh_band_curve,
-    )
-
-    got = [tuple(r) for r in d22_lsh_band_curve(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D22_SQL).fetchall()]
-    assert len(got) == 3 and got == want
 
 
 def test_d22_curve_is_nested_and_consistent(spark, sf_dir):
@@ -1277,19 +886,6 @@ def test_d22_curve_is_nested_and_consistent(spark, sf_dir):
     deployed = rows[-1]
     assert deployed["n_candidates"] == d03_lsh_candidate_pairs(spark, sf_dir).count()
     assert deployed["n_true_missed"] == 0
-
-
-def test_t49_matches_duckdb_oracle(spark, sf_dir):
-    """t49 bigram coverage curve is STAGED for round-12 declaration;
-    coverage masses are exact BIGINTs, engine-exact."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T49_SQL,
-        t49_ngram_coverage_curve,
-    )
-
-    got = [tuple(r) for r in t49_ngram_coverage_curve(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T49_SQL).fetchall()]
-    assert len(got) == 3 and got == want
 
 
 def test_t49_coverage_matches_python_recompute(spark, sf_dir):
@@ -1333,20 +929,6 @@ def test_t49_coverage_matches_python_recompute(spark, sf_dir):
 # Round-13 staged batch (gate 12): m11 PCM frame energy, s26 label
 # retrieval eval, v19 try_* battery, r19 multiline CSV.
 # ---------------------------------------------------------------------------
-def test_m11_matches_duckdb_oracle(spark, sf_dir):
-    """m11 PCM frame energy is STAGED for round-13 declaration; the
-    construct->parse loop yields exact BIGINTs the oracle recomputes
-    closed-form from doc_id."""
-    from nlp_data_pipeline_spark.operators.multimodal import (
-        M11_SQL,
-        m11_pcm_frame_energy,
-    )
-
-    got = [tuple(r) for r in m11_pcm_frame_energy(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(M11_SQL).fetchall()]
-    assert len(got) == 64 and got == want
-
-
 def test_m11_matches_python_pcm_recompute(spark, sf_dir):
     """Pure-Python synthesis of the same int16 stream reproduces every
     frame energy and peak exactly (byte-level decode is lossless)."""
@@ -1372,22 +954,6 @@ def test_m11_matches_python_pcm_recompute(spark, sf_dir):
     assert _M11_SAMPLES // _M11_FRAME == 4
 
 
-def test_s26_matches_duckdb_oracle(spark, sf_dir):
-    """s26 label-retrieval eval is STAGED for round-13 declaration; the
-    fold-helper cosine makes rank selection engine-exact."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S26_SQL,
-        s26_label_retrieval_eval,
-    )
-
-    got = [tuple(r) for r in s26_label_retrieval_eval(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S26_SQL).fetchall()
-    ]
-    assert len(got) > 1 and got == want
-
-
 def test_s26_metric_invariants(spark, sf_dir):
     """Retrieval-metric algebra: hits are monotone in K and bounded by
     the cutoff, first_hit_rank is NULL exactly when no hit landed in
@@ -1411,21 +977,6 @@ def test_s26_metric_invariants(spark, sf_dir):
             assert (r["first_hit_rank"] == 1) == (r["hits_at_1"] == 1)
 
 
-def test_v19_matches_duckdb_oracle(spark, sf_dir):
-    """v19 try_* battery is STAGED for round-13 declaration; every
-    null-injection site must agree with the oracle's CASE guards."""
-    from nlp_data_pipeline_spark.operators.sql_api import (
-        V19_SQL,
-        v19_try_functions,
-    )
-
-    got = [tuple(r) for r in v19_try_functions(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("orders",)).execute(V19_SQL).fetchall()
-    ]
-    assert len(got) == 1 and got == want
-
-
 def test_v19_failure_modes_partition_rows(spark, sf_dir):
     """Each try_* column splits the row count coherently: div ok+null
     covers all rows, the word cast never succeeds while the digit
@@ -1439,19 +990,6 @@ def test_v19_failure_modes_partition_rows(spark, sf_dir):
     assert r["n_cast_digit_ok"] == r["n_rows"]
     assert 0 <= r["n_add_ok"] < r["n_rows"]
     assert 0 < r["n_elem_ok"] < r["n_rows"]
-
-
-def test_r19_matches_duckdb_oracle(spark, sf_dir):
-    """r19 multiline quoted-CSV ingestion is STAGED for round-13
-    declaration; the roundtrip reproduces the source rows exactly."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        R19_SQL,
-        r19_multiline_csv_ingest,
-    )
-
-    got = [tuple(r) for r in r19_multiline_csv_ingest(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(R19_SQL).fetchall()]
-    assert len(got) == 20 and got == want
 
 
 def test_r19_staged_file_really_spans_lines(spark, sf_dir):
@@ -1477,21 +1015,6 @@ def test_r19_staged_file_really_spans_lines(spark, sf_dir):
     assert n_lines == 1 + 2 * _R19_N_DOCS
 
 
-def test_q54_matches_duckdb_oracle(spark, sf_dir):
-    """q54 SCD2 dimension build is STAGED for round-13 declaration;
-    change detection + validity stitching must agree exactly."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q54_SQL,
-        q54_scd2_dimension_build,
-    )
-
-    got = [tuple(r) for r in q54_scd2_dimension_build(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(Q54_SQL).fetchall()
-    ]
-    assert len(got) > 1 and got == want
-
-
 def test_q54_scd2_invariants(spark, sf_dir):
     """SCD2 algebra: versions are dense 1..n per key, intervals chain
     exactly (valid_to == next valid_from), exactly one current version
@@ -1513,19 +1036,6 @@ def test_q54_scd2_invariants(spark, sf_dir):
             assert a["valid_to"] == b["valid_from"]
             assert a["attr_value"] != b["attr_value"]
             assert not a["is_current"]
-
-
-def test_d23_matches_duckdb_oracle(spark, sf_dir):
-    """d23 best-copy dedup policy is STAGED for round-13 declaration;
-    the per-cluster argmax must agree engine-exactly."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D23_SQL,
-        d23_best_copy_dedup,
-    )
-
-    got = [tuple(r) for r in d23_best_copy_dedup(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D23_SQL).fetchall()]
-    assert len(got) > 1 and got == want
 
 
 def test_d23_keeper_is_longest_member(spark, sf_dir):
@@ -1555,20 +1065,6 @@ def test_d23_keeper_is_longest_member(spark, sf_dir):
         assert r["min_chars"] == min(chars[d] for d in docs)
         assert r["differs_from_first_copy"] == (best != min(docs))
     assert any(r["differs_from_first_copy"] for r in rows)
-
-
-def test_d24_matches_duckdb_oracle(spark, sf_dir):
-    """d24 alternating-stars CC is STAGED for round-13 declaration; its
-    oracle IS D06_SQL — the O(log n) build must reproduce the flooding
-    clustering byte-for-byte."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D24_SQL,
-        d24_cc_alternating_stars,
-    )
-
-    got = [tuple(r) for r in d24_cc_alternating_stars(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D24_SQL).fetchall()]
-    assert len(got) > 1 and got == want
 
 
 def test_d24_equals_d06_clustering(spark, sf_dir):
@@ -1617,19 +1113,6 @@ def test_d24_converges_fast_on_a_chain(spark):
     assert rounds <= 10
 
 
-def test_t50_matches_duckdb_oracle(spark, sf_dir):
-    """t50 length-bucketed batching is STAGED for round-13 declaration;
-    bucket assignment is a pure-integer CASE chain, engine-exact."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T50_SQL,
-        t50_length_bucketed_batches,
-    )
-
-    got = [tuple(r) for r in t50_length_bucketed_batches(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T50_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_t50_bucket_accounting(spark, sf_dir):
     """Bucketed-batching algebra: buckets are from the declared grid,
     doc counts total the corpus, batches cover their docs at the batch
@@ -1649,21 +1132,6 @@ def test_t50_bucket_accounting(spark, sf_dir):
         assert r["n_batches"] == -(-r["n_docs"] // _T50_BATCH)
         assert r["pad_tokens"] + r["eff_tokens"] == r["n_docs"] * r["bucket_len"]
         assert 0 <= r["pad_tokens"] < r["n_docs"] * r["bucket_len"]
-
-
-def test_q55_matches_duckdb_oracle(spark, sf_dir):
-    """q55 effectivity join is STAGED for round-13 declaration; the
-    interval-predicate join must agree engine-exactly."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q55_SQL,
-        q55_effectivity_join,
-    )
-
-    got = [tuple(r) for r in q55_effectivity_join(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(Q55_SQL).fetchall()
-    ]
-    assert len(got) > 1 and got == want
 
 
 def test_q55_intervals_partition_the_timeline(spark, sf_dir):
@@ -1699,19 +1167,6 @@ def test_q55_intervals_partition_the_timeline(spark, sf_dir):
     }
 
 
-def test_p07_matches_duckdb_oracle(spark, sf_dir):
-    """p07 dataset card is STAGED for round-13 declaration; every cell
-    is an exact count, engine-exact."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        P07_SQL,
-        p07_dataset_card,
-    )
-
-    got = [tuple(r) for r in p07_dataset_card(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(P07_SQL).fetchall()]
-    assert len(got) > 1 and got == want
-
-
 def test_p07_card_reconciles_with_d01(spark, sf_dir):
     """Cross-op accounting: the card's per-source dup load totals the
     corpus-wide d01 exact-dedup excess (copies beyond each content
@@ -1732,22 +1187,6 @@ def test_p07_card_reconciles_with_d01(spark, sf_dir):
     # per-source dup sums can only under-count the global excess when a
     # text repeats ACROSS sources (each source still sees it once)
     assert sum(r["n_exact_dup_docs"] for r in rows) <= d01_excess
-
-
-def test_s27_matches_duckdb_oracle(spark, sf_dir):
-    """s27 IVF+PQ search is STAGED for round-13 declaration; cluster
-    confinement + ADC table lookups must compose engine-exactly."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S27_SQL,
-        s27_ivfpq_search,
-    )
-
-    got = [tuple(r) for r in s27_ivfpq_search(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S27_SQL).fetchall()
-    ]
-    assert len(got) > 1 and got == want
 
 
 def test_s27_composes_s07_confinement_with_s11_scoring(spark, sf_dir):
@@ -1782,20 +1221,6 @@ def test_s27_composes_s07_confinement_with_s11_scoring(spark, sf_dir):
     for r in shared:
         assert r["adc_d2"] == full[(r["query_id"], r["vec_id"])]
     assert NPROBE < 16  # confinement is real: fewer than all clusters
-
-
-def test_a08_matches_duckdb_oracle(spark, sf_dir):
-    """a08 KMV merge is STAGED for round-13 declaration; the Spark side
-    computes the global sketch ONLY through the per-source merge path,
-    the oracle directly — hash equality proves the merge law."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        A08_SQL,
-        a08_kmv_sketch_merge,
-    )
-
-    got = [tuple(r) for r in a08_kmv_sketch_merge(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(A08_SQL).fetchall()]
-    assert len(got) == 1 and got == want
 
 
 def test_a08_merge_equals_direct_python_recompute(spark, sf_dir):
@@ -1869,20 +1294,6 @@ def test_q53_exact_gap_boundary_merges(spark):
     assert per_user[2] == [1, 1]   # split: two singleton sessions
 
 
-def test_q56_matches_duckdb_oracle(spark, sf_dir):
-    """q56 small-file compaction is STAGED for round-13 declaration;
-    both phases' layouts must satisfy the declared file contracts with
-    rows conserved."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q56_SQL,
-        q56_small_file_compaction,
-    )
-
-    got = [tuple(r) for r in q56_small_file_compaction(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(Q56_SQL).fetchall()]
-    assert len(got) == 2 and got == want
-
-
 def test_q56_compaction_preserves_rows_on_disk(spark, sf_dir):
     """Direct disk check: the fragmented dir really holds FRAG parquet
     files and the compacted dir COMPACT, and both read back the same
@@ -1908,32 +1319,13 @@ def test_q56_compaction_preserves_rows_on_disk(spark, sf_dir):
     assert a == b
 
 
-def test_d25_matches_duckdb_oracle(spark, sf_dir):
-    """d25 lexical x semantic overlap is STAGED for round-13
-    declaration; the 2x2 contingency must agree engine-exactly with
-    all three category rows always present."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D25_SQL,
-        d25_lexical_semantic_overlap,
-    )
-
-    got = [tuple(r) for r in d25_lexical_semantic_overlap(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("documents", "embeddings"))
-        .execute(D25_SQL)
-        .fetchall()
-    ]
-    assert [r[0] for r in got] == ["both", "lexical_only", "semantic_only"]
-    assert got == want
-
-
 def test_d25_reconciles_with_both_pair_ops(spark, sf_dir):
     """Accounting against the source ops: both + lexical_only equals
     d03's embedded-pair count, both + semantic_only equals s06's pair
     count, and on THIS corpus (embeddings independent of text) the
     tiers are disjoint — 'both' is exactly zero, the honest expected
-    value that any table misalignment would disturb."""
+    value that any table misalignment would disturb. All three category
+    rows are always present."""
     from nlp_data_pipeline_spark.operators.dedup import (
         d03_lsh_candidate_pairs,
         d25_lexical_semantic_overlap,
@@ -1944,7 +1336,9 @@ def test_d25_reconciles_with_both_pair_ops(spark, sf_dir):
     from nlp_data_pipeline_spark.sources.catalog import load_table
     from pyspark.sql import functions as F
 
-    cat = {r["category"]: r["n_pairs"] for r in d25_lexical_semantic_overlap(spark, sf_dir).collect()}
+    rows = d25_lexical_semantic_overlap(spark, sf_dir).collect()
+    assert [r[0] for r in rows] == ["both", "lexical_only", "semantic_only"]
+    cat = {r["category"]: r["n_pairs"] for r in rows}
     emb_ids = {
         r["vec_id"] for r in load_table(spark, sf_dir, "embeddings").select("vec_id").collect()
     }
@@ -1957,19 +1351,6 @@ def test_d25_reconciles_with_both_pair_ops(spark, sf_dir):
     assert cat["both"] + cat["lexical_only"] == lex_embedded
     assert cat["both"] + cat["semantic_only"] == n_sem
     assert cat["both"] == 0
-
-
-def test_t51_matches_duckdb_oracle(spark, sf_dir):
-    """t51 tokenizer fertility is STAGED for round-14 declaration;
-    masses are exact BIGINT sums, ratios single IEEE divisions."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T51_SQL,
-        t51_token_fertility,
-    )
-
-    got = [tuple(r) for r in t51_token_fertility(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T51_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_t51_fertility_algebra(spark, sf_dir):
@@ -1989,19 +1370,6 @@ def test_t51_fertility_algebra(spark, sf_dir):
         assert r["all_ascii"] == (r["total_bytes"] == r["total_chars"])
 
 
-def test_t52_matches_duckdb_oracle(spark, sf_dir):
-    """t52 lang-ID confusion matrix is STAGED for round-14 declaration;
-    the oracle composes the already-green T07 SQL as a CTE."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T52_SQL,
-        t52_lang_confusion,
-    )
-
-    got = [tuple(r) for r in t52_lang_confusion(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T52_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_t52_cells_total_the_corpus(spark, sf_dir):
     """Confusion cells partition the corpus: cell counts sum to the
     doc count, per-label totals are consistent across a label's cells,
@@ -2019,20 +1387,6 @@ def test_t52_cells_total_the_corpus(spark, sf_dir):
         assert r["is_correct"] == (r["labeled_lang"] == r["pred_lang"])
     for label, cells in by_label.items():
         assert all(c["labeled_total"] == sum(x["n_docs"] for x in cells) for c in cells)
-
-
-def test_a09_matches_duckdb_oracle(spark, sf_dir):
-    """a09 pairwise KMV intersection is STAGED for round-14; both
-    engines compute the same deterministic md5 order-statistics
-    estimate value-for-value (the a06/a08 pattern)."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        A09_SQL,
-        a09_kmv_intersection,
-    )
-
-    got = [tuple(r) for r in a09_kmv_intersection(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(A09_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_a09_estimator_algebra(spark, sf_dir):
@@ -2056,22 +1410,6 @@ def test_a09_estimator_algebra(spark, sf_dir):
         assert r["exact_intersection"] >= 0
         if r["rho"] == 0:
             assert r["kmv_inter_est"] == 0.0
-
-
-def test_s28_matches_duckdb_oracle(spark, sf_dir):
-    """s28 binary-quantized search is STAGED for round-14; packing,
-    XOR+popcount ranks, and the exact re-score must match DuckDB."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S28_SQL,
-        s28_binary_hamming_search,
-    )
-
-    got = [tuple(r) for r in s28_binary_hamming_search(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S28_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
 
 
 def test_s28_hamming_against_numpy(spark, sf_dir):
@@ -2101,19 +1439,6 @@ def test_s28_hamming_against_numpy(spark, sf_dir):
         prev[r["query_id"]] = r["hamming"]
 
 
-def test_d26_matches_duckdb_oracle(spark, sf_dir):
-    """d26 LSH recall eval is STAGED for round-14; truth is computed
-    independently of LSH via the capped-postings machinery."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D26_SQL,
-        d26_lsh_recall_eval,
-    )
-
-    got = [tuple(r) for r in d26_lsh_recall_eval(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D26_SQL).fetchall()]
-    assert len(got) == 1 and got == want
-
-
 def test_d26_count_algebra(spark, sf_dir):
     """Caught pairs are bounded by both relations, n_missed closes the
     truth set, and each declared ratio is the exact quotient of its
@@ -2127,21 +1452,6 @@ def test_d26_count_algebra(spark, sf_dir):
         assert r["recall"] == r["n_caught"] / r["n_true_pairs"]
     if r["n_candidates"] > 0:
         assert r["precision"] == r["n_caught"] / r["n_candidates"]
-
-
-def test_e23_matches_duckdb_oracle(spark, sf_dir):
-    """e23 sequenced funnel is STAGED for round-14; four chained
-    conditional window minima over one user partitioning."""
-    from nlp_data_pipeline_spark.operators.events import (
-        E23_SQL,
-        e23_conversion_funnel,
-    )
-
-    got = [tuple(r) for r in e23_conversion_funnel(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(E23_SQL).fetchall()
-    ]
-    assert len(got) == 4 and got == want
 
 
 def test_e23_funnel_is_monotone(spark, sf_dir):
@@ -2192,19 +1502,6 @@ def test_e23_sequencing_beats_naive_first_ts(spark):
     assert got == {"signup": 2, "view": 2, "click": 2, "purchase": 1}
 
 
-def test_r20_matches_duckdb_oracle(spark, sf_dir):
-    """r20 schema-evolution merge is STAGED for round-14; mergeSchema
-    widens legacy files with NULLs, audited per source."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        R20_SQL,
-        r20_schema_evolution_merge,
-    )
-
-    got = [tuple(r) for r in r20_schema_evolution_merge(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(R20_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_r20_widening_conserves_rows(spark, sf_dir):
     """The merged read loses nothing: evolved+legacy = total per
     source, and totals reconcile with the raw table."""
@@ -2217,19 +1514,6 @@ def test_r20_widening_conserves_rows(spark, sf_dir):
     assert sum(r["n_rows"] for r in rows) == n_docs
     for r in rows:
         assert r["n_evolved"] + r["n_legacy"] == r["n_rows"]
-
-
-def test_t53_matches_duckdb_oracle(spark, sf_dir):
-    """t53 token-mass Gini is STAGED for round-14; rank-weighted sums
-    are exact BIGINTs, G is one IEEE division."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T53_SQL,
-        t53_token_gini,
-    )
-
-    got = [tuple(r) for r in t53_token_gini(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T53_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_t53_gini_algebra(spark, sf_dir):
@@ -2245,21 +1529,6 @@ def test_t53_gini_algebra(spark, sf_dir):
         assert s <= rws <= n * s
         assert r["gini"] == (2 * rws - (n + 1) * s) / (n * s)
         assert 0.0 <= r["gini"] < 1.0
-
-
-def test_q57_matches_duckdb_oracle(spark, sf_dir):
-    """q57 running-distinct workaround is STAGED for round-14; the
-    first-occurrence-flag + running-sum trick must match DuckDB."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q57_SQL,
-        q57_running_distinct,
-    )
-
-    got = [tuple(r) for r in q57_running_distinct(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(Q57_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
 
 
 def test_q57_coverage_semantics(spark, sf_dir):
@@ -2279,20 +1548,6 @@ def test_q57_coverage_semantics(spark, sf_dir):
         assert 1 <= r["n_distinct_types"] <= r["n_catalog"]
         assert r["fully_covered"] == (r["n_distinct_types"] == r["n_catalog"])
         assert (r["full_coverage_ts"] is not None) == r["fully_covered"]
-
-
-def test_m12_matches_duckdb_oracle(spark, sf_dir):
-    """m12 WebDataset tar index is STAGED for round-14; the kernel's
-    parsed offsets must match the closed-form TAR layout recomputed by
-    DuckDB from the raw documents."""
-    from nlp_data_pipeline_spark.operators.multimodal import (
-        M12_SQL,
-        m12_webdataset_tar_index,
-    )
-
-    got = [tuple(r) for r in m12_webdataset_tar_index(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(M12_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_m12_tar_layout_invariants(spark, sf_dir):
@@ -2315,21 +1570,6 @@ def test_m12_tar_layout_invariants(spark, sf_dir):
         assert r["header_offset"] == prev_end
         prev_end = r["data_offset"] + ((r["size"] + 511) // 512) * 512
         assert len(r["content_sha256"]) == 64
-
-
-def test_v20_matches_duckdb_oracle(spark, sf_dir):
-    """v20 bag-semantics set ops are STAGED for round-14; one shared
-    ANSI text runs on both engines (the v18 battery pattern)."""
-    from nlp_data_pipeline_spark.operators.sql_api import (
-        V20_SQL,
-        v20_bag_set_ops,
-    )
-
-    got = [tuple(r) for r in v20_bag_set_ops(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(V20_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
 
 
 def test_v20_bag_identity(spark, sf_dir):
@@ -2357,21 +1597,6 @@ def test_v20_bag_identity(spark, sf_dir):
         assert n_b.get(t, 0) == inter + ops.get("except_b_minus_a", 0)
 
 
-def test_e24_matches_duckdb_oracle(spark, sf_dir):
-    """e24 late-data accounting is STAGED for round-14; lateness is
-    exact integer microseconds against the arrival-order running max."""
-    from nlp_data_pipeline_spark.operators.events import (
-        E24_SQL,
-        e24_late_data_accounting,
-    )
-
-    got = [tuple(r) for r in e24_late_data_accounting(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(E24_SQL).fetchall()
-    ]
-    assert len(got) == 3 and got == want
-
-
 def test_e24_horizon_monotonicity(spark, sf_dir):
     """A wider watermark can only drop fewer events: n_dropped is
     non-increasing in the horizon, and each fraction is the exact
@@ -2389,22 +1614,6 @@ def test_e24_horizon_monotonicity(spark, sf_dir):
         assert r["frac_dropped"] == r["n_dropped"] / r["n_events"]
 
 
-def test_s29_matches_duckdb_oracle(spark, sf_dir):
-    """s29 binary-vs-float recall is STAGED for round-14; the oracle
-    composes S01_SQL and S28_SQL verbatim as CTEs."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S29_SQL,
-        s29_binary_recall_eval,
-    )
-
-    got = [tuple(r) for r in s29_binary_recall_eval(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S29_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_s29_recall_bounds(spark, sf_dir):
     """One row per s01 query; hits bounded by the exact top-k; recall
     is the exact quotient."""
@@ -2420,19 +1629,6 @@ def test_s29_recall_bounds(spark, sf_dir):
         assert r["n_true"] == TOP_K
         assert 0 <= r["n_hits"] <= r["n_true"]
         assert r["recall"] == r["n_hits"] / r["n_true"]
-
-
-def test_a10_matches_duckdb_oracle(spark, sf_dir):
-    """a10 KMV K-curve is STAGED for round-14; all three K arms read
-    the same ranked relation, engine-exact like a06."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        A10_SQL,
-        a10_kmv_k_curve,
-    )
-
-    got = [tuple(r) for r in a10_kmv_k_curve(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(A10_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_a10_contains_a06_and_orders_hashes(spark, sf_dir):
@@ -2462,19 +1658,6 @@ def test_a10_contains_a06_and_orders_hashes(spark, sf_dir):
         assert arms[16]["kth_hash"] < arms[32]["kth_hash"] < arms[64]["kth_hash"]
 
 
-def test_t54_matches_duckdb_oracle(spark, sf_dir):
-    """t54 cross-doc duplicate 5-gram deciles are STAGED for round-15;
-    buckets are pure integer arithmetic (DIV ≡ // on non-negatives)."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T54_SQL,
-        t54_dup_ngram_fraction,
-    )
-
-    got = [tuple(r) for r in t54_dup_ngram_fraction(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T54_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_t54_deciles_partition_eligible_docs(spark, sf_dir):
     """Decile counts per source total exactly the docs with ≥5 tokens
     (the 5-gram-eligible universe), and deciles stay in [0, 9]."""
@@ -2487,19 +1670,6 @@ def test_t54_deciles_partition_eligible_docs(spark, sf_dir):
     for r in rows:
         assert 0 <= r["decile"] <= 9
         assert r["n_docs"] >= 1
-
-
-def test_d27_matches_duckdb_oracle(spark, sf_dir):
-    """d27 1-bit minhash is STAGED for round-15; parity bits and the
-    b-bit correction must match DuckDB on the deployed candidates."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D27_SQL,
-        d27_bbit_minhash,
-    )
-
-    got = [tuple(r) for r in d27_bbit_minhash(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D27_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_d27_estimator_algebra(spark, sf_dir):
@@ -2516,20 +1686,6 @@ def test_d27_estimator_algebra(spark, sf_dir):
         assert r["est_1bit"] == (2 * r["n_match_1bit"] - NUM_HASHES) / NUM_HASHES
 
 
-def test_m13_matches_duckdb_oracle(spark, sf_dir):
-    """m13 JPEG marker walk is STAGED for round-15; a wrong walk
-    offset garbles every downstream field, so hash equality against
-    the closed-form layout is the parse proof."""
-    from nlp_data_pipeline_spark.operators.multimodal import (
-        M13_SQL,
-        m13_jpeg_header_parse,
-    )
-
-    got = [tuple(r) for r in m13_jpeg_header_parse(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(M13_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_m13_walk_recovers_fields(spark, sf_dir):
     """Every synthesized prefix validates, the COM segment round-trips
     the variable-length source name, and dims obey the generation
@@ -2543,22 +1699,6 @@ def test_m13_walk_recovers_fields(spark, sf_dir):
         assert r["comment_text"].startswith("src")
         assert 16 <= r["height"] <= 255 and 16 <= r["width"] <= 135
         assert r["n_components"] == 3
-
-
-def test_s30_matches_duckdb_oracle(spark, sf_dir):
-    """s30 quantization error budget is STAGED for round-15; SQ8 grid
-    rules and the sign proxy must match DuckDB on s01's pairs."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S30_SQL,
-        s30_quantization_error_budget,
-    )
-
-    got = [tuple(r) for r in s30_quantization_error_budget(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S30_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
 
 
 def test_s30_tier_errors_ordered(spark, sf_dir):
@@ -2582,22 +1722,6 @@ def test_s30_tier_errors_ordered(spark, sf_dir):
         assert r["err_sq8"] >= 0 and r["err_sign"] >= 0
 
 
-def test_q58_matches_duckdb_oracle(spark, sf_dir):
-    """q58 null-skew salting is STAGED for round-15; the oracle is the
-    PLAIN outer join, so the hash gate proves salting preserved
-    semantics exactly."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q58_SQL,
-        q58_null_skew_outer_join,
-    )
-
-    got = [tuple(r) for r in q58_null_skew_outer_join(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(Q58_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_q58_null_keys_never_match(spark, sf_dir):
     """Salted nulls land outside the dimension's key domain: matched +
     null-key rows can overlap with nothing, so n_matched + n_null_key
@@ -2613,19 +1737,6 @@ def test_q58_null_keys_never_match(spark, sf_dir):
         # every user_id in events exists in the self-derived dim, so
         # all non-null keys must match
         assert r["n_matched"] == r["n_rows"] - r["n_null_key"]
-
-
-def test_r21_matches_duckdb_oracle(spark, sf_dir):
-    """r21 PERMISSIVE malformed-CSV audit is STAGED for round-15; the
-    quarantine split must equal the closed-form generation rule."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        R21_SQL,
-        r21_permissive_csv_audit,
-    )
-
-    got = [tuple(r) for r in r21_permissive_csv_audit(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(R21_SQL).fetchall()]
-    assert len(got) == 1 and got == want
 
 
 def test_r21_quarantine_conserves_rows(spark, sf_dir):
@@ -2647,19 +1758,6 @@ def test_r21_quarantine_conserves_rows(spark, sf_dir):
     )
 
 
-def test_d28_matches_duckdb_oracle(spark, sf_dir):
-    """d28 edit-distance verify is STAGED for round-15; Levenshtein is
-    a uniquely-defined integer so the tier is oracle-exact."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D28_SQL,
-        d28_edit_distance_verify,
-    )
-
-    got = [tuple(r) for r in d28_edit_distance_verify(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D28_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_d28_metric_properties(spark, sf_dir):
     """Levenshtein bounds: |len_a − len_b| ≤ dist ≤ max(len), and the
     normalized similarity is the declared quotient in [0, 1]."""
@@ -2675,19 +1773,6 @@ def test_d28_metric_properties(spark, sf_dir):
         assert 0.0 <= r["norm_similarity"] <= 1.0
 
 
-def test_t55_matches_duckdb_oracle(spark, sf_dir):
-    """t55 character-class mix is STAGED for round-15; explicit ASCII
-    classes only (no \\w-style shorthands — the regex-parity rule)."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T55_SQL,
-        t55_char_class_mix,
-    )
-
-    got = [tuple(r) for r in t55_char_class_mix(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T55_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_t55_masses_partition_chars(spark, sf_dir):
     """Class masses are non-negative, sum to the total (other is the
     exact remainder), and frac_alpha is the declared quotient."""
@@ -2700,19 +1785,6 @@ def test_t55_masses_partition_chars(spark, sf_dir):
         assert all(p >= 0 for p in parts)
         assert sum(parts) == r["total_chars"]
         assert r["frac_alpha"] == (r["n_lower"] + r["n_upper"]) / r["total_chars"]
-
-
-def test_p08_matches_duckdb_oracle(spark, sf_dir):
-    """p08 curation waterfall is STAGED for round-15; the oracle
-    composes P04_SQL verbatim so both sides share verdict rules."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        P08_SQL,
-        p08_curation_waterfall,
-    )
-
-    got = [tuple(r) for r in p08_curation_waterfall(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(P08_SQL).fetchall()]
-    assert len(got) == 4 and got == want
 
 
 def test_p08_waterfall_reconciles_with_p04(spark, sf_dir):
@@ -2737,19 +1809,6 @@ def test_p08_waterfall_reconciles_with_p04(spark, sf_dir):
     assert rows[-1]["n_surviving"] == kept
 
 
-def test_a11_matches_duckdb_oracle(spark, sf_dir):
-    """a11 Bloom FPR curve is STAGED for round-15; filter state and
-    measured FPR are md5 integer arithmetic, engine-exact."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        A11_SQL,
-        a11_bloom_fpr_curve,
-    )
-
-    got = [tuple(r) for r in a11_bloom_fpr_curve(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(A11_SQL).fetchall()]
-    assert len(got) == 3 and got == want
-
-
 def test_a11_fpr_decreases_with_bits(spark, sf_dir):
     """More bits can only help: FPR is non-increasing in m, bits set
     are bounded by both 2·members and m, and fpr is the declared
@@ -2764,21 +1823,6 @@ def test_a11_fpr_decreases_with_bits(spark, sf_dir):
     for r in rows:
         assert 0 < r["n_bits_set"] <= min(2 * r["n_members"], r["m_bits"])
         assert r["fpr"] == r["n_false_pos"] / r["n_probes"]
-
-
-def test_e25_matches_duckdb_oracle(spark, sf_dir):
-    """e25 transition matrix is STAGED for round-15; lag over the
-    exact (ts, event_id) total order, integer counts, one division."""
-    from nlp_data_pipeline_spark.operators.events import (
-        E25_SQL,
-        e25_transition_matrix,
-    )
-
-    got = [tuple(r) for r in e25_transition_matrix(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(E25_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
 
 
 def test_e25_rows_are_distributions(spark, sf_dir):
@@ -2800,22 +1844,6 @@ def test_e25_rows_are_distributions(spark, sf_dir):
     for cells in by_from.values():
         assert cells[0]["from_total"] == sum(c["n_transitions"] for c in cells)
         assert abs(sum(c["prob"] for c in cells) - 1.0) < 1e-9
-
-
-def test_v21_matches_duckdb_oracle(spark, sf_dir):
-    """v21 observe() metrics are STAGED for round-15; equality with
-    the plain-SQL aggregates proves the observation saw every row of
-    the write exactly once."""
-    from nlp_data_pipeline_spark.operators.sql_api import (
-        V21_SQL,
-        v21_observe_metrics,
-    )
-
-    got = [tuple(r) for r in v21_observe_metrics(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(V21_SQL).fetchall()
-    ]
-    assert len(got) == 1 and got == want
 
 
 def test_v21_observation_rides_the_write(spark, sf_dir):
@@ -2886,24 +1914,6 @@ def test_s28_scan_projects_only_needed_columns(spark, sf_dir):
     assert "label" not in plan
 
 
-def test_q59_matches_duckdb_oracle(spark, sf_dir):
-    """q59 relative-rank battery is STAGED for round-15; all three
-    functions are ANSI-identical given the declared total order."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q59_SQL,
-        q59_analytic_rank_battery,
-    )
-
-    got = [tuple(r) for r in q59_analytic_rank_battery(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("orders", "customer"))
-        .execute(Q59_SQL)
-        .fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_q59_relative_rank_algebra(spark, sf_dir):
     """Within each segment: pct_rank and cume are in [0,1] and
     non-decreasing along the spend order, quartiles are 1..4
@@ -2928,19 +1938,6 @@ def test_q59_relative_rank_algebra(spark, sf_dir):
         assert all(0.0 <= c["pct_rank"] <= 1.0 for c in cells)
 
 
-def test_r22_matches_duckdb_oracle(spark, sf_dir):
-    """r22 wholetext ingestion is STAGED for round-15; per-file sha256
-    against the source table is the byte-exact round-trip proof."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        R22_SQL,
-        r22_wholetext_ingest,
-    )
-
-    got = [tuple(r) for r in r22_wholetext_ingest(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(R22_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_r22_one_row_per_file(spark, sf_dir):
     """wholetext yields exactly one row per staged file, with the
     filename-recovered doc_id dense over the staged range."""
@@ -2960,19 +1957,6 @@ def test_r22_one_row_per_file(spark, sf_dir):
             f"SELECT doc_id FROM documents WHERE doc_id < {_R22_N_DOCS}"
         ).fetchall()
     )
-
-
-def test_t56_matches_duckdb_oracle(spark, sf_dir):
-    """t56 signal correlation is STAGED for round-16; exact BIGINT
-    sufficient statistics, one float expression per pair."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T56_SQL,
-        t56_signal_correlation,
-    )
-
-    got = [tuple(r) for r in t56_signal_correlation(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T56_SQL).fetchall()]
-    assert len(got) == 3 and got == want
 
 
 def test_t56_pearson_properties(spark, sf_dir):
@@ -2995,22 +1979,6 @@ def test_t56_pearson_properties(spark, sf_dir):
     assert rows["bytes~tokens"]["pearson_r"] > 0.9
 
 
-def test_s31_matches_duckdb_oracle(spark, sf_dir):
-    """s31 IVF list balance is STAGED for round-16; the oracle
-    composes S04_SQL verbatim."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S31_SQL,
-        s31_ivf_list_balance,
-    )
-
-    got = [tuple(r) for r in s31_ivf_list_balance(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S31_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_s31_lists_partition_the_corpus(spark, sf_dir):
     """Every vector lands in exactly one list: member counts total the
     corpus, shares sum to 1, and load factors average exactly 1."""
@@ -3023,19 +1991,6 @@ def test_s31_lists_partition_the_corpus(spark, sf_dir):
     assert abs(sum(r["load_factor"] for r in rows) / len(rows) - 1.0) < 1e-9
     for r in rows:
         assert r["load_factor"] == r["n_vecs"] * r["n_lists"] / total
-
-
-def test_d29_matches_duckdb_oracle(spark, sf_dir):
-    """d29 cluster purity is STAGED for round-16; the oracle nests
-    D06_SQL's recursive closure as a CTE body."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D29_SQL,
-        d29_cluster_purity,
-    )
-
-    got = [tuple(r) for r in d29_cluster_purity(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D29_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_d29_purity_algebra(spark, sf_dir):
@@ -3061,20 +2016,6 @@ def test_d29_purity_algebra(spark, sf_dir):
         assert d06_sizes[r["cluster_id"]] == r["cluster_size"]
 
 
-def test_e26_matches_duckdb_oracle(spark, sf_dir):
-    """e26 hour-of-day profile is STAGED for round-16."""
-    from nlp_data_pipeline_spark.operators.events import (
-        E26_SQL,
-        e26_hourly_profile,
-    )
-
-    got = [tuple(r) for r in e26_hourly_profile(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(E26_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_e26_shares_are_distributions(spark, sf_dir):
     """Per type: hour counts total the type mass, shares sum to 1,
     hours stay in [0, 23]."""
@@ -3088,19 +2029,6 @@ def test_e26_shares_are_distributions(spark, sf_dir):
     for cells in by_type.values():
         assert cells[0]["type_total"] == sum(c["n_events"] for c in cells)
         assert abs(sum(c["share"] for c in cells) - 1.0) < 1e-9
-
-
-def test_m14_matches_duckdb_oracle(spark, sf_dir):
-    """m14 .npy parse is STAGED for round-16; header arithmetic and
-    the element walk must match the closed-form layout."""
-    from nlp_data_pipeline_spark.operators.multimodal import (
-        M14_SQL,
-        m14_npy_header_parse,
-    )
-
-    got = [tuple(r) for r in m14_npy_header_parse(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(M14_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_m14_bytes_are_real_npy(spark, sf_dir):
@@ -3124,21 +2052,6 @@ def test_m14_bytes_are_real_npy(spark, sf_dir):
         n = 1 + r["doc_id"] % 5
         assert arr.dtype == np.int64 and arr.shape == (n,)
         assert arr.tolist() == [n_chars[r["doc_id"]] * j for j in range(1, n + 1)]
-
-
-def test_v22_matches_duckdb_oracle(spark, sf_dir):
-    """v22 argmax/conditional aggregate battery is STAGED for
-    round-16; one shared ANSI text on both engines."""
-    from nlp_data_pipeline_spark.operators.sql_api import (
-        V22_SQL,
-        v22_aggregate_battery,
-    )
-
-    got = [tuple(r) for r in v22_aggregate_battery(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(V22_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
 
 
 def test_v22_argmax_agrees_with_window_spelling(spark, sf_dir):
@@ -3165,21 +2078,6 @@ def test_v22_argmax_agrees_with_window_spelling(spark, sf_dir):
     assert got == want
 
 
-def test_e27_matches_duckdb_oracle(spark, sf_dir):
-    """e27 error-burst detector is STAGED for round-16; the burst
-    flag is an integer cross-multiplication, boundary-safe."""
-    from nlp_data_pipeline_spark.operators.events import (
-        E27_SQL,
-        e27_error_burst_detector,
-    )
-
-    got = [tuple(r) for r in e27_error_burst_detector(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(E27_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_e27_burst_flag_is_exact_threshold(spark, sf_dir):
     """The flag equals the declared integer inequality recomputed
     from the declared counts, and hour masses total the corpus."""
@@ -3197,19 +2095,6 @@ def test_e27_burst_flag_is_exact_threshold(spark, sf_dir):
         assert r["error_rate"] == r["n_errors"] / r["n_events"]
 
 
-def test_t57_matches_duckdb_oracle(spark, sf_dir):
-    """t57 pattern-flag profile is STAGED for round-16; literal
-    contains() only — no cross-engine regex surface."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T57_SQL,
-        t57_pattern_flag_profile,
-    )
-
-    got = [tuple(r) for r in t57_pattern_flag_profile(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T57_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_t57_any_flag_bounds(spark, sf_dir):
     """n_any is at least the largest single flag and at most the sum
     of all flags (inclusion-exclusion sanity), and frac is the exact
@@ -3225,21 +2110,6 @@ def test_t57_any_flag_bounds(spark, sf_dir):
         singles = [r[f"n_{name}"] for name, _ in _T57_PATTERNS]
         assert max(singles) <= r["n_any"] <= min(sum(singles), r["n_docs"])
         assert r["frac_flagged"] == r["n_any"] / r["n_docs"]
-
-
-def test_q60_matches_duckdb_oracle(spark, sf_dir):
-    """q60 TWAP is STAGED for round-16; exact cents×µs BIGINT
-    accumulation, one final division."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q60_SQL,
-        q60_time_weighted_average,
-    )
-
-    got = [tuple(r) for r in q60_time_weighted_average(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(Q60_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
 
 
 def test_q60_twap_within_value_range(spark, sf_dir):
@@ -3279,35 +2149,6 @@ def test_q60_twap_within_value_range(spark, sf_dir):
         assert r["twap"] == float(r["weighted_cents_us"]) / float(r["span_us"]) / 100.0
 
 
-def test_u10_matches_duckdb_oracle(spark, sf_dir):
-    """u10 applyInArrow is STAGED for round-16; hash equality with
-    plain SQL proves the Arrow group boundary delivered every row of
-    every group exactly once."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        U10_SQL,
-        u10_apply_in_arrow,
-    )
-
-    got = [tuple(r) for r in u10_apply_in_arrow(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(U10_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
-def test_t58_matches_duckdb_oracle(spark, sf_dir):
-    """t58 dedup-aware token budget is STAGED for round-16; the
-    keeper rule is d01's, restated verbatim."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T58_SQL,
-        t58_dedup_token_budget,
-    )
-
-    got = [tuple(r) for r in t58_dedup_token_budget(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T58_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_t58_reconciles_with_d01(spark, sf_dir):
     """Keeper counts must total d01's cluster count, kept ≤ raw per
     source, and the corpus has real duplication to account for."""
@@ -3322,19 +2163,6 @@ def test_t58_reconciles_with_d01(spark, sf_dir):
     for r in rows:
         assert 0 < r["kept_tokens"] <= r["raw_tokens"]
         assert 0.0 <= r["dup_token_frac"] < 1.0
-
-
-def test_a12_matches_duckdb_oracle(spark, sf_dir):
-    """a12 sketch cross-validation is STAGED for round-16; exact and
-    KMV columns hash-exact, HLL as the a01-style tolerance boolean."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        A12_SQL,
-        a12_sketch_crosscheck,
-    )
-
-    got = [tuple(r) for r in a12_sketch_crosscheck(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(A12_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_a12_agrees_with_a06(spark, sf_dir):
@@ -3354,19 +2182,6 @@ def test_a12_agrees_with_a06(spark, sf_dir):
         assert r["hll_within_15pct"] is True
 
 
-def test_r23_matches_duckdb_oracle(spark, sf_dir):
-    """r23 record-separator ingestion is STAGED for round-16; content
-    shas re-identify each recovered record byte-exactly."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        R23_SQL,
-        r23_linesep_ingest,
-    )
-
-    got = [tuple(r) for r in r23_linesep_ingest(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(R23_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_r23_recovers_every_record_once(spark, sf_dir):
     """The 0x1E split yields exactly the staged records, each once."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
@@ -3380,19 +2195,6 @@ def test_r23_recovers_every_record_once(spark, sf_dir):
     assert len(rows) == _duck(sf_dir).execute(
         f"SELECT COUNT(*) FROM documents WHERE doc_id < {_R23_N_DOCS}"
     ).fetchone()[0]
-
-
-def test_d30_matches_duckdb_oracle(spark, sf_dir):
-    """d30's merge-path candidates must hash-equal D03's full-build
-    pair set — the LSH index mergeability proof."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D30_SQL,
-        d30_lsh_index_merge,
-    )
-
-    got = [tuple(r) for r in d30_lsh_index_merge(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D30_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
 
 
 def test_d30_equals_full_build_in_engine(spark, sf_dir):
@@ -3446,19 +2248,6 @@ def test_n05_idf_tracks_document_frequency(spark, sf_dir):
         assert r["idf"] > 0
 
 
-def test_d31_matches_duckdb_oracle(spark, sf_dir):
-    """d31 shingle-df histogram is STAGED for round-17; power-of-two
-    buckets via length(bin(df)) — the t50 integer rule."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D31_SQL,
-        d31_shingle_df_histogram,
-    )
-
-    got = [tuple(r) for r in d31_shingle_df_histogram(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D31_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_d31_masses_reconcile(spark, sf_dir):
     """Bucket masses total the capped-family's postings relation, df²
     mass dominates df mass, and buckets hold 2^(b-1) ≤ df < 2^b."""
@@ -3471,21 +2260,6 @@ def test_d31_masses_reconcile(spark, sf_dir):
         lo, hi = 2 ** (b - 1), 2 ** b - 1
         assert lo * r["n_shingles"] <= r["n_postings"] <= hi * r["n_shingles"]
         assert r["selfjoin_pairs_mass"] >= r["n_postings"]
-
-
-def test_e28_matches_duckdb_oracle(spark, sf_dir):
-    """e28 inter-arrival histogram is STAGED for round-17; gaps in
-    exact µs, integer buckets, zero-gap bucket pinned to 0."""
-    from nlp_data_pipeline_spark.operators.events import (
-        E28_SQL,
-        e28_interarrival_histogram,
-    )
-
-    got = [tuple(r) for r in e28_interarrival_histogram(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(E28_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
 
 
 def test_e28_gap_count_reconciles(spark, sf_dir):
@@ -3504,22 +2278,6 @@ def test_e28_gap_count_reconciles(spark, sf_dir):
         if r["gap_bucket"] > 0:
             lo, hi = 2 ** (r["gap_bucket"] - 1), 2 ** r["gap_bucket"] - 1
             assert lo * r["n_gaps"] <= r["gap_mass_us"] <= hi * r["n_gaps"]
-
-
-def test_s32_matches_duckdb_oracle(spark, sf_dir):
-    """s32 re-rank window curve is STAGED for round-17; one ranked
-    Hamming relation serves every window prefix."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S32_SQL,
-        s32_rerank_window_curve,
-    )
-
-    got = [tuple(r) for r in s32_rerank_window_curve(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S32_SQL).fetchall()
-    ]
-    assert len(got) == 3 and got == want
 
 
 def test_s32_nests_and_contains_s29(spark, sf_dir):
@@ -3543,21 +2301,6 @@ def test_s32_nests_and_contains_s29(spark, sf_dir):
         assert r["recall"] == r["total_hits"] / r["total_true"]
 
 
-def test_v23_matches_duckdb_oracle(spark, sf_dir):
-    """v23 explicit NULL ordering is STAGED for round-17; green ONLY
-    because both ORDER BYs spell out their null placement."""
-    from nlp_data_pipeline_spark.operators.sql_api import (
-        V23_SQL,
-        v23_null_ordering,
-    )
-
-    got = [tuple(r) for r in v23_null_ordering(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(V23_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_v23_null_block_placement(spark, sf_dir):
     """Under NULLS FIRST every null row ranks before every non-null
     row; under NULLS LAST, after — and the non-null relative order is
@@ -3573,18 +2316,6 @@ def test_v23_null_block_placement(spark, sf_dir):
             assert r["rn_nulls_last"] > len(rows) - n_null
         else:
             assert r["rn_nulls_last"] == r["rn_nulls_first"] - n_null
-
-
-def test_t59_matches_duckdb_oracle(spark, sf_dir):
-    """t59 shared-header detection is STAGED for round-17."""
-    from nlp_data_pipeline_spark.operators.text_analytics import (
-        T59_SQL,
-        t59_shared_header_keys,
-    )
-
-    got = [tuple(r) for r in t59_shared_header_keys(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(T59_SQL).fetchall()]
-    assert got == want
 
 
 def test_t59_finds_planted_template(spark):
@@ -3610,21 +2341,6 @@ def test_t59_finds_planted_template(spark):
     assert r["templated_frac"] == 3 / 4
 
 
-def test_q61_matches_duckdb_oracle(spark, sf_dir):
-    """q61 retention cohorts are STAGED for round-17; week keys
-    declare as TIMESTAMP, offsets as integer day-diff DIV 7."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        Q61_SQL,
-        q61_retention_cohorts,
-    )
-
-    got = [tuple(r) for r in q61_retention_cohorts(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(Q61_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_q61_triangle_invariants(spark, sf_dir):
     """Week-0 retention is exactly 1 for every cohort, retention never
     exceeds 1, and cohort sizes total the user population."""
@@ -3646,19 +2362,6 @@ def test_q61_triangle_invariants(spark, sf_dir):
     assert sum(cohorts.values()) == n_users
 
 
-def test_a13_matches_duckdb_oracle(spark, sf_dir):
-    """a13 sampling-error curve is STAGED for round-17; nested md5
-    samples, exact integer sums, single divisions."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        A13_SQL,
-        a13_sample_error_curve,
-    )
-
-    got = [tuple(r) for r in a13_sample_error_curve(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(A13_SQL).fetchall()]
-    assert len(got) == 3 and got == want
-
-
 def test_a13_samples_nest(spark, sf_dir):
     """The K=10 sample token mass is bounded by K=20's which is
     bounded by K=40's (prefix nesting of one ranked relation), every
@@ -3678,20 +2381,6 @@ def test_a13_samples_nest(spark, sf_dir):
         assert r["abs_error"] == abs(r["sample_mean"] - r["pop_mean"])
 
 
-def test_m15_matches_duckdb_oracle(spark, sf_dir):
-    """m15 ZIP shard index is STAGED for round-17; STORED layout is
-    closed-form so the oracle recomputes offsets and shas from the
-    raw documents."""
-    from nlp_data_pipeline_spark.operators.multimodal import (
-        M15_SQL,
-        m15_zip_shard_index,
-    )
-
-    got = [tuple(r) for r in m15_zip_shard_index(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(M15_SQL).fetchall()]
-    assert len(got) >= 1 and got == want
-
-
 def test_m15_stored_layout_invariants(spark, sf_dir):
     """STORED members tile the archive: each local header sits exactly
     one 30-byte header + name + payload after the previous one."""
@@ -3709,19 +2398,6 @@ def test_m15_stored_layout_invariants(spark, sf_dir):
     for r in rows:
         assert r["header_offset"] == prev_end
         prev_end = r["header_offset"] + 30 + len(r["member_name"]) + r["size"]
-
-
-def test_p09_matches_duckdb_oracle(spark, sf_dir):
-    """p09 token waterfall is STAGED for round-17; p08's set
-    arithmetic re-weighted by token mass, oracle nests P04_SQL."""
-    from nlp_data_pipeline_spark.operators.doc_pipeline import (
-        P09_SQL,
-        p09_token_waterfall,
-    )
-
-    got = [tuple(r) for r in p09_token_waterfall(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(P09_SQL).fetchall()]
-    assert len(got) == 4 and got == want
 
 
 def test_p09_reconciles_with_p04_and_p08(spark, sf_dir):
@@ -3747,21 +2423,6 @@ def test_p09_reconciles_with_p04_and_p08(spark, sf_dir):
     assert rows[-1]["tokens_surviving"] == kept
 
 
-def test_e29_matches_duckdb_oracle(spark, sf_dir):
-    """e29 behavior entropy is STAGED for round-17; one FIXED-ORDER
-    float expression per row, never SUM over rows (the t40 rule)."""
-    from nlp_data_pipeline_spark.operators.events import (
-        E29_SQL,
-        e29_behavior_entropy,
-    )
-
-    got = [tuple(r) for r in e29_behavior_entropy(spark, sf_dir).collect()]
-    want = [
-        tuple(r) for r in _duck(sf_dir, views=("events",)).execute(E29_SQL).fetchall()
-    ]
-    assert len(got) >= 1 and got == want
-
-
 def test_e29_entropy_bounds(spark, sf_dir):
     """0 ≤ H ≤ ln(5) for a 5-type catalog, and a user with all five
     types in equal measure would sit at the max (checked via bound
@@ -3779,3 +2440,380 @@ def test_e29_entropy_bounds(spark, sf_dir):
     for r in rows:
         assert -1e-9 <= r["entropy_nats"] <= h_max + 1e-9
     assert max(r["entropy_nats"] for r in rows) > 0.5 * h_max
+
+
+# Named DuckDB parity checks: each runs the shared oracle check
+# (conftest.oracle_check) for one query; a query the sweep in
+# test_entry_contract.py already passed is not run again.
+
+
+def test_t40_matches_duckdb_oracle(oracle_check):
+    oracle_check("t40_ols_sufficient_stats")
+
+
+def test_t42_matches_duckdb_oracle(oracle_check):
+    oracle_check("t42_bigram_surprisal")
+
+
+def test_t44_matches_duckdb_oracle(oracle_check):
+    oracle_check("t44_source_temperature_mix")
+
+
+def test_t43_matches_duckdb_oracle(oracle_check):
+    oracle_check("t43_quality_score_inference")
+
+
+def test_q48_matches_duckdb_oracle(oracle_check):
+    oracle_check("q48_zorder_layout")
+
+
+def test_q49_matches_duckdb_oracle(oracle_check):
+    oracle_check("q49_interval_overlap_join")
+
+
+def test_a05_matches_duckdb_oracle(oracle_check):
+    oracle_check("a05_bloom_semijoin")
+
+
+def test_s21_matches_duckdb_oracle(oracle_check):
+    oracle_check("s21_hard_negative_mining")
+
+
+def test_s22_matches_duckdb_oracle(oracle_check):
+    oracle_check("s22_label_centroid_similarity")
+
+
+def test_t45_matches_duckdb_oracle(oracle_check):
+    oracle_check("t45_token_budget_waterfill")
+
+
+def test_q51_matches_duckdb_oracle(oracle_check):
+    oracle_check("q51_cbo_stats_join")
+
+
+def test_a06_matches_duckdb_oracle(oracle_check):
+    oracle_check("a06_kmv_distinct_sketch")
+
+
+def test_v18_matches_duckdb_oracle(oracle_check):
+    oracle_check("v18_null_semantics")
+
+
+def test_t46_matches_duckdb_oracle(oracle_check):
+    oracle_check("t46_quality_threshold_curve")
+
+
+def test_s23_matches_duckdb_oracle(oracle_check):
+    oracle_check("s23_beam_width_curve")
+
+
+def test_s24_matches_duckdb_oracle(oracle_check):
+    oracle_check("s24_topical_source_mix")
+
+
+def test_d20_matches_duckdb_oracle(oracle_check):
+    oracle_check("d20_bloom_decontamination")
+
+
+def test_t47_matches_duckdb_oracle(oracle_check):
+    oracle_check("t47_span_corruption_plan")
+
+
+def test_m10_matches_duckdb_oracle(oracle_check):
+    oracle_check("m10_image_patch_grid")
+
+
+def test_q52_matches_duckdb_oracle(oracle_check):
+    oracle_check("q52_file_metadata_audit")
+
+
+def test_t48_matches_duckdb_oracle(oracle_check):
+    oracle_check("t48_packing_efficiency_curve")
+
+
+def test_q53_matches_duckdb_oracle(oracle_check):
+    oracle_check("q53_sessionize_batch")
+
+
+def test_s25_matches_duckdb_oracle(oracle_check):
+    oracle_check("s25_mutual_knn_pairs")
+
+
+def test_a07_matches_duckdb_oracle(oracle_check):
+    oracle_check("a07_reservoir_sample")
+
+
+def test_d21_matches_duckdb_oracle(oracle_check):
+    oracle_check("d21_split_contamination_audit")
+
+
+def test_d22_matches_duckdb_oracle(oracle_check):
+    oracle_check("d22_lsh_band_curve")
+
+
+def test_t49_matches_duckdb_oracle(oracle_check):
+    oracle_check("t49_ngram_coverage_curve")
+
+
+def test_m11_matches_duckdb_oracle(oracle_check):
+    oracle_check("m11_pcm_frame_energy")
+
+
+def test_s26_matches_duckdb_oracle(oracle_check):
+    oracle_check("s26_label_retrieval_eval")
+
+
+def test_v19_matches_duckdb_oracle(oracle_check):
+    oracle_check("v19_try_functions")
+
+
+def test_r19_matches_duckdb_oracle(oracle_check):
+    oracle_check("r19_multiline_csv_ingest")
+
+
+def test_q54_matches_duckdb_oracle(oracle_check):
+    oracle_check("q54_scd2_dimension_build")
+
+
+def test_d23_matches_duckdb_oracle(oracle_check):
+    oracle_check("d23_best_copy_dedup")
+
+
+def test_d24_matches_duckdb_oracle(oracle_check):
+    oracle_check("d24_cc_alternating_stars")
+
+
+def test_t50_matches_duckdb_oracle(oracle_check):
+    oracle_check("t50_length_bucketed_batches")
+
+
+def test_q55_matches_duckdb_oracle(oracle_check):
+    oracle_check("q55_effectivity_join")
+
+
+def test_p07_matches_duckdb_oracle(oracle_check):
+    oracle_check("p07_dataset_card")
+
+
+def test_s27_matches_duckdb_oracle(oracle_check):
+    oracle_check("s27_ivfpq_search")
+
+
+def test_a08_matches_duckdb_oracle(oracle_check):
+    oracle_check("a08_kmv_sketch_merge")
+
+
+def test_q56_matches_duckdb_oracle(oracle_check):
+    oracle_check("q56_small_file_compaction")
+
+
+def test_d25_matches_duckdb_oracle(oracle_check):
+    oracle_check("d25_lexical_semantic_overlap")
+
+
+def test_t51_matches_duckdb_oracle(oracle_check):
+    oracle_check("t51_token_fertility")
+
+
+def test_t52_matches_duckdb_oracle(oracle_check):
+    oracle_check("t52_lang_confusion")
+
+
+def test_a09_matches_duckdb_oracle(oracle_check):
+    oracle_check("a09_kmv_intersection")
+
+
+def test_s28_matches_duckdb_oracle(oracle_check):
+    oracle_check("s28_binary_hamming_search")
+
+
+def test_d26_matches_duckdb_oracle(oracle_check):
+    oracle_check("d26_lsh_recall_eval")
+
+
+def test_e23_matches_duckdb_oracle(oracle_check):
+    oracle_check("e23_conversion_funnel")
+
+
+def test_r20_matches_duckdb_oracle(oracle_check):
+    oracle_check("r20_schema_evolution_merge")
+
+
+def test_t53_matches_duckdb_oracle(oracle_check):
+    oracle_check("t53_token_gini")
+
+
+def test_q57_matches_duckdb_oracle(oracle_check):
+    oracle_check("q57_running_distinct")
+
+
+def test_m12_matches_duckdb_oracle(oracle_check):
+    oracle_check("m12_webdataset_tar_index")
+
+
+def test_v20_matches_duckdb_oracle(oracle_check):
+    oracle_check("v20_bag_set_ops")
+
+
+def test_e24_matches_duckdb_oracle(oracle_check):
+    oracle_check("e24_late_data_accounting")
+
+
+def test_s29_matches_duckdb_oracle(oracle_check):
+    oracle_check("s29_binary_recall_eval")
+
+
+def test_a10_matches_duckdb_oracle(oracle_check):
+    oracle_check("a10_kmv_k_curve")
+
+
+def test_t54_matches_duckdb_oracle(oracle_check):
+    oracle_check("t54_dup_ngram_fraction")
+
+
+def test_d27_matches_duckdb_oracle(oracle_check):
+    oracle_check("d27_bbit_minhash")
+
+
+def test_m13_matches_duckdb_oracle(oracle_check):
+    oracle_check("m13_jpeg_header_parse")
+
+
+def test_s30_matches_duckdb_oracle(oracle_check):
+    oracle_check("s30_quantization_error_budget")
+
+
+def test_q58_matches_duckdb_oracle(oracle_check):
+    oracle_check("q58_null_skew_outer_join")
+
+
+def test_r21_matches_duckdb_oracle(oracle_check):
+    oracle_check("r21_permissive_csv_audit")
+
+
+def test_d28_matches_duckdb_oracle(oracle_check):
+    oracle_check("d28_edit_distance_verify")
+
+
+def test_t55_matches_duckdb_oracle(oracle_check):
+    oracle_check("t55_char_class_mix")
+
+
+def test_p08_matches_duckdb_oracle(oracle_check):
+    oracle_check("p08_curation_waterfall")
+
+
+def test_a11_matches_duckdb_oracle(oracle_check):
+    oracle_check("a11_bloom_fpr_curve")
+
+
+def test_e25_matches_duckdb_oracle(oracle_check):
+    oracle_check("e25_transition_matrix")
+
+
+def test_v21_matches_duckdb_oracle(oracle_check):
+    oracle_check("v21_observe_metrics")
+
+
+def test_q59_matches_duckdb_oracle(oracle_check):
+    oracle_check("q59_analytic_rank_battery")
+
+
+def test_r22_matches_duckdb_oracle(oracle_check):
+    oracle_check("r22_wholetext_ingest")
+
+
+def test_t56_matches_duckdb_oracle(oracle_check):
+    oracle_check("t56_signal_correlation")
+
+
+def test_s31_matches_duckdb_oracle(oracle_check):
+    oracle_check("s31_ivf_list_balance")
+
+
+def test_d29_matches_duckdb_oracle(oracle_check):
+    oracle_check("d29_cluster_purity")
+
+
+def test_e26_matches_duckdb_oracle(oracle_check):
+    oracle_check("e26_hourly_profile")
+
+
+def test_m14_matches_duckdb_oracle(oracle_check):
+    oracle_check("m14_npy_header_parse")
+
+
+def test_v22_matches_duckdb_oracle(oracle_check):
+    oracle_check("v22_aggregate_battery")
+
+
+def test_e27_matches_duckdb_oracle(oracle_check):
+    oracle_check("e27_error_burst_detector")
+
+
+def test_t57_matches_duckdb_oracle(oracle_check):
+    oracle_check("t57_pattern_flag_profile")
+
+
+def test_q60_matches_duckdb_oracle(oracle_check):
+    oracle_check("q60_time_weighted_average")
+
+
+def test_u10_matches_duckdb_oracle(oracle_check):
+    oracle_check("u10_apply_in_arrow")
+
+
+def test_t58_matches_duckdb_oracle(oracle_check):
+    oracle_check("t58_dedup_token_budget")
+
+
+def test_a12_matches_duckdb_oracle(oracle_check):
+    oracle_check("a12_sketch_crosscheck")
+
+
+def test_r23_matches_duckdb_oracle(oracle_check):
+    oracle_check("r23_linesep_ingest")
+
+
+def test_d30_matches_duckdb_oracle(oracle_check):
+    oracle_check("d30_lsh_index_merge")
+
+
+def test_d31_matches_duckdb_oracle(oracle_check):
+    oracle_check("d31_shingle_df_histogram")
+
+
+def test_e28_matches_duckdb_oracle(oracle_check):
+    oracle_check("e28_interarrival_histogram")
+
+
+def test_s32_matches_duckdb_oracle(oracle_check):
+    oracle_check("s32_rerank_window_curve")
+
+
+def test_v23_matches_duckdb_oracle(oracle_check):
+    oracle_check("v23_null_ordering")
+
+
+def test_t59_matches_duckdb_oracle(oracle_check):
+    oracle_check("t59_shared_header_keys")
+
+
+def test_q61_matches_duckdb_oracle(oracle_check):
+    oracle_check("q61_retention_cohorts")
+
+
+def test_a13_matches_duckdb_oracle(oracle_check):
+    oracle_check("a13_sample_error_curve")
+
+
+def test_m15_matches_duckdb_oracle(oracle_check):
+    oracle_check("m15_zip_shard_index")
+
+
+def test_p09_matches_duckdb_oracle(oracle_check):
+    oracle_check("p09_token_waterfall")
+
+
+def test_e29_matches_duckdb_oracle(oracle_check):
+    oracle_check("e29_behavior_entropy")

@@ -97,22 +97,12 @@ def test_n05_declared_integers_are_model_state(spark, sf_dir):
         assert abs(expect - r["idf"]) < 1e-9, (r["term"], r["df"], r["n_docs"])
 
 
-def test_s33_matches_duckdb_oracle(spark, sf_dir):
-    """s33: mutual-kNN over the linear-cost NN-descent build, declared
-    as exact-truth count + integer-percent quality booleans (the r08
-    verdict's s25 perf-twin ask)."""
-    from nlp_data_pipeline_spark.operators.similarity import (
-        S33_SQL,
-        s33_mutual_knn_nnd_recall,
-    )
+def test_s33_declared_booleans_hold(spark, sf_dir):
+    """Both declared quality booleans are true at the test sf."""
+    from nlp_data_pipeline_spark.operators.similarity import s33_mutual_knn_nnd_recall
 
-    got = [tuple(r) for r in s33_mutual_knn_nnd_recall(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("embeddings",)).execute(S33_SQL).fetchall()
-    ]
-    assert len(got) == 1 and got == want
-    assert got[0][1] is True and got[0][2] is True
+    [row] = s33_mutual_knn_nnd_recall(spark, sf_dir).collect()
+    assert row[1] is True and row[2] is True
 
 
 def test_s33_quality_margin_above_declared_floor(spark, sf_dir):
@@ -166,20 +156,6 @@ def test_nnd_state_directed_topm_feeds_the_declared_graph(spark, sf_dir):
     assert closure <= want
 
 
-def test_d32_matches_duckdb_oracle(spark, sf_dir):
-    """d32: delta-vs-base incremental dedup classification (exact sha
-    tier, banded-LSH + integer-Jaccard near tier, first-match
-    precedence)."""
-    from nlp_data_pipeline_spark.operators.dedup import (
-        D32_SQL,
-        d32_incremental_dedup_delta,
-    )
-
-    got = [tuple(r) for r in d32_incremental_dedup_delta(spark, sf_dir).collect()]
-    want = [tuple(r) for r in _duck(sf_dir).execute(D32_SQL).fetchall()]
-    assert got and got == want
-
-
 def test_d32_verdicts_partition_the_delta(spark, sf_dir):
     """Every delta doc gets exactly one verdict: the three counts sum
     to n_delta per source, and n_delta totals the odd-doc_id rows."""
@@ -192,23 +168,6 @@ def test_d32_verdicts_partition_the_delta(spark, sf_dir):
         "SELECT COUNT(*) FROM documents WHERE doc_id % 2 = 1"
     ).fetchone()[0]
     assert sum(r["n_delta"] for r in rows) == n_odd
-
-
-def test_u11_matches_duckdb_oracle(spark, sf_dir):
-    """u11: nested array<struct> through a scalar pandas UDF, struct out
-    — the nested Arrow round-trip surface, declared against a plain-SQL
-    oracle."""
-    from nlp_data_pipeline_spark.operators.relational_ext import (
-        U11_SQL,
-        u11_nested_arrow_udf,
-    )
-
-    got = [tuple(r) for r in u11_nested_arrow_udf(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("events",)).execute(U11_SQL).fetchall()
-    ]
-    assert got and got == want
 
 
 def test_u11_last_type_is_order_not_luck(spark, sf_dir):
@@ -231,19 +190,6 @@ def test_u11_last_type_is_order_not_luck(spark, sf_dir):
     assert got == want
 
 
-def test_v24_matches_duckdb_oracle(spark, sf_dir):
-    """v24: the SQL UNPIVOT clause in its multi-measure aliased form vs
-    the classic UNION ALL longhand."""
-    from nlp_data_pipeline_spark.operators.sql_api import V24_SQL, v24_sql_unpivot
-
-    got = [tuple(r) for r in v24_sql_unpivot(spark, sf_dir).collect()]
-    want = [
-        tuple(r)
-        for r in _duck(sf_dir, views=("orders",)).execute(V24_SQL).fetchall()
-    ]
-    assert got and got == want
-
-
 def test_v24_unpivot_conserves_order_and_money_mass(spark, sf_dir):
     """Melting must conserve both measures: per-priority n_orders sums
     to the orders row count and cents sums to the DECIMAL total."""
@@ -257,3 +203,24 @@ def test_v24_unpivot_conserves_order_and_money_mass(spark, sf_dir):
     ).fetchone()
     assert n_total == want_n
     assert cents_total == want_cents
+
+
+# Named DuckDB parity checks: each runs the shared oracle check
+# (conftest.oracle_check) for one query; a query the sweep in
+# test_entry_contract.py already passed is not run again.
+
+
+def test_s33_matches_duckdb_oracle(oracle_check):
+    oracle_check("s33_mutual_knn_nnd_recall")
+
+
+def test_d32_matches_duckdb_oracle(oracle_check):
+    oracle_check("d32_incremental_dedup_delta")
+
+
+def test_u11_matches_duckdb_oracle(oracle_check):
+    oracle_check("u11_nested_arrow_udf")
+
+
+def test_v24_matches_duckdb_oracle(oracle_check):
+    oracle_check("v24_sql_unpivot")

@@ -12,12 +12,13 @@ Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _norm(v):
@@ -48,6 +49,13 @@ def _norm(v):
 
 def _key(row):
     return tuple((repr(x) for x in row))
+
+
+def normalized_rows(rows, cols, col_order) -> list:
+    """``rows`` (with column names ``cols``) as comparable keys over the
+    columns ``col_order``, in their given row order."""
+    idx = [list(cols).index(c) for c in col_order]
+    return [_key(tuple(_norm(r[i]) for i in idx)) for r in rows]
 
 
 def _dtype_kind(dt) -> str:
@@ -84,11 +92,8 @@ def compare(name: str, spark_df, duck_rows, duck_cols, s_pdf=None, d_pdf=None):
                 issues.append(
                     f"DTYPE {c}: spark={s_pdf[c].dtype}({sk}) duck={d_pdf[c].dtype}({dk})"
                 )
-    col_order = s_cols
-    s_idx = [spark_df.columns.index(c) for c in col_order]
-    d_idx = [list(duck_cols).index(c) for c in col_order]
-    s_rows = sorted(_key(tuple(_norm(r[i]) for i in s_idx)) for r in spark_df.collect())
-    d_rows = sorted(_key(tuple(_norm(r[i]) for i in d_idx)) for r in duck_rows)
+    s_rows = sorted(normalized_rows(spark_df.collect(), spark_df.columns, s_cols))
+    d_rows = sorted(normalized_rows(duck_rows, duck_cols, s_cols))
     if len(s_rows) != len(d_rows):
         issues.append(f"ROWCOUNT: spark={len(s_rows)} duck={len(d_rows)}")
     mismatch = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
